@@ -79,16 +79,6 @@ def _prep(df: DataFrame, id_col: str, vec_col: str, dim: int | None) -> DataFram
     )
 
 
-def _cents_row(df: DataFrame, cents: list[Centroid]) -> DataFrame:
-    """One broadcast row of centroid arrays (the ivf_ann_topk shape): a
-    ~k*dim*8-byte BroadcastNestedLoopJoin against a single row — no shuffle,
-    no per-row literal re-parse, no 200 KB janino expression."""
-    return df.sparkSession.createDataFrame(
-        [([c.cell for c in cents], [c.vec for c in cents], [c.norm for c in cents])],
-        "_cells array<int>, _cvs array<array<double>>, _cns array<double>",
-    )
-
-
 def kmeans_assign(v: DataFrame, cents: list[Centroid]) -> DataFrame:
     """Attach ``cell`` = argmax-cosine centroid to a prepped (_id, _vec,
     _norm) frame.

@@ -295,42 +295,9 @@ def hyperplane_weight(seed: int, plane: int, dim_idx: int) -> float:
     return float((h % 2) * 2 - 1)
 
 
-def hyperplane_sign_bucket(
-    vec_col: Column | str, n_planes: int = 8, dim: int | None = None, seed: int = 0
-) -> Column:
-    """Deterministic random-hyperplane bucket id for a vector column.
-
-    The hyperplanes are CONSTANTS: their ±1 weights are md5-derived on the
-    driver and baked into the expression as literals, so per row the
-    bucket costs n_planes statically-expanded dot products (codegen'd) —
-    no per-element hashing in the hot path. Returns an int in
-    [0, 2^n_planes).
-
-    Built as ONE SQL string through ``F.expr``: composing the ~n_planes*dim
-    terms with Column operators costs one Py4J round-trip per node (~3.2s
-    measured for 8x64 — pure driver overhead, tripled for multiband); the
-    JVM SQL parser handles the same tree in milliseconds. The arithmetic is
-    term-for-term identical to the old Column composition (sequential
-    left-to-right adds), so results and oracle parity are unchanged.
-    """
-    if dim is None:
-        raise ValueError("hyperplane_sign_bucket needs a static dim (use _infer_dim)")
-    name = vec_col if isinstance(vec_col, str) else vec_col._jc.toString()
-    v = f"cast(`{name}` as array<double>)"
-
-    def plane_term(p: int) -> str:
-        proj = " + ".join(
-            f"(element_at({v}, {d + 1}) * {hyperplane_weight(seed, p, d):.1f}D)"
-            for d in range(dim)
-        )
-        return f"(CASE WHEN ({proj}) > 0 THEN {1 << p} ELSE 0 END)"
-
-    return F.expr(" + ".join(plane_term(p) for p in range(n_planes)))
-
-
 def _np_planes(n_planes: int, dim: int, seed: int):
     """The ±1 hyperplane weight matrix (n_planes x dim) — the same
-    md5-derived constants ``hyperplane_sign_bucket`` bakes into SQL."""
+    md5-derived constants the oracle SQL embeds as list literals."""
     import numpy as np
 
     return np.array(
@@ -339,12 +306,12 @@ def _np_planes(n_planes: int, dim: int, seed: int):
 
 
 def _np_bucket(V, W):
-    """Sign-LSH bucket ids for a vector batch — the kernel twin of
-    ``hyperplane_sign_bucket``. Projections use the module's ordered
-    dimension-axis accumulation; the SQL plane term starts at e1*w1
-    rather than 0.0, but 0.0 + x is bit-identical except 0.0 + (-0.0)
-    = +0.0, and the only consumer is ``proj > 0`` where ±0.0 compare
-    equal — bucket decisions match the SQL expression exactly."""
+    """Sign-LSH bucket ids for a vector batch, over the same md5-derived
+    planes as the oracle's ``_lsh_bucket_sql``. Projections use the
+    module's ordered dimension-axis accumulation; a SQL sum that starts at
+    e1*w1 rather than 0.0 differs only in 0.0 + (-0.0) = +0.0, and the
+    only consumer is ``proj > 0`` where ±0.0 compare equal — bucket
+    decisions match the sequential SQL sum exactly."""
     import numpy as np
 
     proj = _np_grid_dots(V, W)  # (n, n_planes)
