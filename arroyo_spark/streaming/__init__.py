@@ -16,7 +16,6 @@ from arroyo_spark.streaming.processor import FileStreamSource, StreamProcessor  
 from arroyo_spark.streaming.sources import (  # noqa: F401
     StreamSource,
     build_kafka_consumer_options,
-    file_source,
     iceberg_source,
     kafka_source,
     rate_source,

@@ -236,7 +236,7 @@ def epoch_ann_transform(
 
     # infer the (constant) dimension at most ONCE across epochs: _infer_dim
     # is a .first() driver job, and paying it per epoch is exactly the
-    # serial fixed cost the epoch_cost_probe work drives down (ADVICE r4 #4)
+    # serial fixed cost perfbench's processor.serial_ms_p50 tracks (ADVICE r4 #4)
     _dim_cache = {"d": dim, "W": None}
 
     def transform(batch_df: DataFrame) -> DataFrame:

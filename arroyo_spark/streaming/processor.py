@@ -74,18 +74,6 @@ class StreamProcessor:
     # are dumped to stuck_file and arroyo.consumer.stuck increments
     stuck_timeout_s: float | None = None
     stuck_file: str | None = None
-    # FAIR-scheduler pool for this query's jobs. With
-    # spark.scheduler.mode=FAIR and one pool per concurrent streaming
-    # query, neither query's stages starve behind the other's — measured
-    # on the 33M-turn scaling workload: the stream-stream join's first
-    # micro-batch waited 51.6s behind the agg's stages under FIFO
-    # (triggerExecution 51.6s vs addBatch 7.2s), while a pool-per-query
-    # FAIR run improved BOTH legs of the 2->8-core pair
-    # (BENCH/scaling_pool_r5_fair.jsonl: 26.9k/94.0k t/s vs 22-24k/73-85k
-    # under FIFO). The query's MicroBatchExecution thread inherits the
-    # local property at start(); the caller's thread-local value is
-    # restored afterwards so composition with other processors is safe.
-    scheduler_pool: str | None = None
     _query: object = field(default=None, repr=False)
     _stuck_detector: object = field(default=None, repr=False)
 
@@ -134,10 +122,6 @@ class StreamProcessor:
             self._stuck_detector = StuckDetector(self.stuck_timeout_s, self.stuck_file)
             self.spark.streams.addListener(self._stuck_detector)
             self._stuck_detector.start()
-        sc = self.spark.sparkContext
-        prev_pool = sc.getLocalProperty("spark.scheduler.pool") if self.scheduler_pool else None
-        if self.scheduler_pool is not None:
-            sc.setLocalProperty("spark.scheduler.pool", self.scheduler_pool)
         try:
             self._query = writer.start()
         except Exception:
@@ -145,9 +129,6 @@ class StreamProcessor:
             # thread + listener attached to the shared SparkSession
             self._teardown_stuck_detector()
             raise
-        finally:
-            if self.scheduler_pool is not None:
-                sc.setLocalProperty("spark.scheduler.pool", prev_pool)
         return self._query
 
     def _teardown_stuck_detector(self) -> None:

@@ -68,7 +68,7 @@ class ExactlyOnceSink:
     _synthetic_next: int = field(default=0, repr=False)
     # cached copy of schema.json (None until first commit or first read)
     _schema_json: str | None = field(default=None, repr=False)
-    # partitions seen so far (lineage fast path): None until first lineage
+    # partitions seen so far (lineage epochs): None until first lineage
     # epoch, then recovered from the ledger + grown on rebalance
     _known_partitions: set | None = field(default=None, repr=False)
 
@@ -160,38 +160,12 @@ class ExactlyOnceSink:
             return
         batch_df = batch_df.persist()
         try:
-
-            # ONE action for count + per-partition next-offsets + max event
-            # time: per-epoch driver actions are serial cost that caps
-            # scaling efficiency — never spend two passes where one works
-            next_offsets: dict[int, int] = {}
-            max_ts = None
-            if has_lineage:
-                stats = (
-                    batch_df.groupBy("partition")
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        (F.max("offset") + 1).alias("no"),
-                        F.max("ts").alias("mts"),
-                    )
-                    .collect()
-                )
-                n_total = sum(r["n"] for r in stats)
-                for r in stats:
-                    next_offsets[r["partition"]] = r["no"]
-                    if r["mts"] is not None:
-                        max_ts = max(max_ts, r["mts"]) if max_ts else r["mts"]
-            else:
-                # continuous mode (pre-aggregated batches): still record the
-                # consumer-latency metric from any event-time column present
-                ts_col = next((c for c in ("ts", "win_end", "win_start") if c in batch_df.columns), None)
-                if ts_col is not None:
-                    row = batch_df.agg(
-                        F.count(F.lit(1)).alias("n"), F.max(ts_col).alias("mts")
-                    ).collect()[0]
-                    n_total, max_ts = row["n"], row["mts"]
-                else:
-                    n_total = batch_df.count()
+            # ONE stats action on the persisted batch, before any write: the
+            # DLQ-limit check below needs n_total and must fail-stop first
+            aggs, known = self._stats_aggs(batch_df, has_lineage)
+            n_total, max_ts, next_offsets = self._decode_stats(
+                batch_df, batch_df.agg(*aggs).collect()[0].asDict(), known, has_lineage
+            )
 
             n_invalid = 0
             data_in = batch_df
@@ -232,7 +206,7 @@ class ExactlyOnceSink:
     ) -> None:
         """Single-job epoch commit: observe() folds the ledger stats into
         the data write itself — the epoch costs exactly one Spark job and
-        zero persists (plus a rare rebalance fallback, below).
+        zero persists (plus a rare rebalance pass, see ``_decode_stats``).
 
         The observe node sits BELOW the transform, so counts reflect the
         epoch's input rows exactly as the two-pass path measured them;
@@ -246,38 +220,12 @@ class ExactlyOnceSink:
         static (it changes only on rebalance), so the sink keeps a
         known-partition set and observes `max(offset) WHERE partition = p`
         per known partition, plus a count of rows from UNKNOWN partitions.
-        Steady state: one job. When an unknown partition appears (first
-        epoch after start/rebalance): one extra aggregation pass over just
-        the unknown partitions' rows, then it joins the known set."""
+        Steady state: one job. An unknown partition (first epoch after
+        start/rebalance) costs one extra pass, then joins the known set."""
         from pyspark.sql import Observation
 
-        ts_col = next((c for c in ("ts", "win_end", "win_start") if c in batch_df.columns), None)
+        aggs, known = self._stats_aggs(batch_df, has_lineage)
         obs = Observation()
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if ts_col is not None:
-            aggs.append(F.max(ts_col).alias("mts"))
-        known: list[int] = []
-        if has_lineage:
-            if self._known_partitions is None:
-                # restart recovery: partitions seen by committed epochs
-                self._known_partitions = set(self.ledger.committed_offsets())
-            known = sorted(self._known_partitions)
-            for p in known:
-                aggs.append(
-                    F.max(F.when(F.col("partition") == p, F.col("offset"))).alias(f"no_{p}")
-                )
-            # NULL partitions must land in unknown_n, not vanish: a bare
-            # ~isin(known) is NULL (not true) for NULL partitions, so such
-            # rows would be counted by neither branch and their offsets
-            # silently dropped from next_offsets (ADVICE r4). Coalesce the
-            # predicate; the fresh-partition pass below then rejects NULLs
-            # explicitly (lineage batches contract: partition is non-null).
-            unknown_pred = (
-                F.col("partition").isNull() | ~F.col("partition").isin(known)
-                if known
-                else F.lit(True)
-            )
-            aggs.append(F.count(F.when(unknown_pred, 1)).alias("unknown_n"))
         observed = batch_df.observe(obs, *aggs)
         out = self.transform(observed) if self.transform is not None else observed
         self._retry(lambda: out.write.mode("overwrite").parquet(self.data_dir(epoch_id)))
@@ -299,40 +247,74 @@ class ExactlyOnceSink:
             # the observation unset. Rare and cheap by construction (the
             # plan that triggers it does no scan work): fall back to the
             # explicit stats pass over batch_df.
-            row = batch_df.agg(*aggs).collect()[0]
-            vals = row.asDict()
+            vals = batch_df.agg(*aggs).collect()[0].asDict()
+        n_total, max_ts, next_offsets = self._decode_stats(batch_df, vals, known, has_lineage)
+        self._finalize(epoch_id, t0, n_total, 0, max_ts, next_offsets, has_lineage=has_lineage)
+
+    def _stats_aggs(
+        self, batch_df: DataFrame, has_lineage: bool
+    ) -> tuple[list[Column], list[int]]:
+        """The ledger's epoch stats as one aggregation list, shared by the
+        fast path (observe) and the DLQ path (a plain agg): row count
+        ``n``, max event time ``mts`` and, for lineage batches, ``no_<p>``
+        = max offset per known partition plus ``unknown_n`` = rows from
+        partitions outside the known set. Returns (aggs, known)."""
+        ts_col = next((c for c in ("ts", "win_end", "win_start") if c in batch_df.columns), None)
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if ts_col is not None:
+            aggs.append(F.max(ts_col).alias("mts"))
+        known: list[int] = []
+        if has_lineage:
+            if self._known_partitions is None:
+                # restart recovery: partitions seen by committed epochs
+                self._known_partitions = set(self.ledger.committed_offsets())
+            known = sorted(self._known_partitions)
+            for p in known:
+                aggs.append(
+                    F.max(F.when(F.col("partition") == p, F.col("offset"))).alias(f"no_{p}")
+                )
+            # NULL partitions must land in unknown_n, not vanish: a bare
+            # ~isin(known) is NULL (not true) for NULL partitions, so such
+            # rows would be counted by neither branch and their offsets
+            # silently dropped from next_offsets (ADVICE r4). Coalesce the
+            # predicate; the fresh-partition pass in _decode_stats then
+            # rejects NULLs explicitly (lineage contract: partition is
+            # non-null).
+            aggs.append(F.count(F.when(self._unknown_pred(known), 1)).alias("unknown_n"))
+        return aggs, known
+
+    @staticmethod
+    def _unknown_pred(known: list[int]) -> Column:
+        if not known:
+            return F.lit(True)
+        return F.col("partition").isNull() | ~F.col("partition").isin(known)
+
+    def _decode_stats(
+        self, batch_df: DataFrame, vals: dict, known: list[int], has_lineage: bool
+    ) -> tuple[int, object, dict[int, int]]:
+        """(n_total, max_ts, next_offsets) from the ``_stats_aggs`` values.
+
+        Rows from unknown partitions (first epoch after start/rebalance)
+        cost one extra aggregation over just those rows — batch_df is
+        re-computable inside foreachBatch (pinned to this epoch's offsets,
+        deterministic) — and then join the known set. ``mts`` already
+        covers every row, so that pass only needs the offsets."""
         next_offsets: dict[int, int] = {}
-        max_ts = vals.get("mts")
         if has_lineage:
             for p in known:
                 if vals.get(f"no_{p}") is not None:
                     next_offsets[p] = vals[f"no_{p}"] + 1
             if vals.get("unknown_n", 0):
-                # rebalance fallback: aggregate ONLY the new partitions'
-                # rows (batch_df is re-computable inside foreachBatch —
-                # pinned to this epoch's offsets, deterministic)
-                fresh = batch_df
-                if known:
-                    fresh = fresh.filter(
-                        F.col("partition").isNull() | ~F.col("partition").isin(known)
-                    )
-                for r in (
-                    fresh.groupBy("partition")
-                    .agg((F.max("offset") + 1).alias("no"), F.max("ts").alias("mts"))
-                    .collect()
-                ):
+                fresh = batch_df.filter(self._unknown_pred(known))
+                for r in fresh.groupBy("partition").agg(F.max("offset").alias("mo")).collect():
                     if r["partition"] is None:
                         raise ValueError(
                             "lineage batch contains NULL partition — offsets "
                             "cannot be tracked; fix the source or drop lineage"
                         )
-                    next_offsets[r["partition"]] = r["no"]
-                    if r["mts"] is not None:
-                        max_ts = max(max_ts, r["mts"]) if max_ts else r["mts"]
+                    next_offsets[r["partition"]] = r["mo"] + 1
                 self._known_partitions.update(next_offsets)
-        self._finalize(
-            epoch_id, t0, vals["n"], 0, max_ts, next_offsets, has_lineage=has_lineage
-        )
+        return vals["n"], vals.get("mts"), next_offsets
 
     def _finalize(
         self,
@@ -433,17 +415,10 @@ class ExactlyOnceSink:
         if not tail:
             return covered
         upto = max(tail)
-        parts = []
-        if comp is not None:
-            parts.append(spark.read.parquet(comp["path"]))
-        tail_dirs = [d for d in (self.data_dir(e) for e in tail) if os.path.exists(d)]
-        if tail_dirs:
-            parts.append(
-                spark.read.option("basePath", f"{self.output_dir}/data").parquet(*tail_dirs)
-            )
-        if not parts:
+        try:
+            store = self.read_output(spark)
+        except FileNotFoundError:
             return covered
-        store = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         if self.compact_keys:
             n = num_buckets or spark.sparkContext.defaultParallelism
             store = store.repartition(n, *[F.col(k) for k in self.compact_keys])
@@ -503,26 +478,17 @@ class ExactlyOnceSink:
         With compaction enabled the scan is the compacted store + the
         uncompacted tail — O(1 + tail) dirs, not O(committed epochs).
         """
-        comp = self.ledger.latest_compaction()
-        covered = comp["upto_epoch"] if comp is not None else None
-        dirs = [
-            d
-            for d in (
-                self.data_dir(e)
-                for e in self.ledger.epochs()
-                if covered is None or e > covered
-            )
-            if os.path.exists(d)
-        ]
-        parts = []
-        if comp is not None:
-            parts.append(spark.read.parquet(comp["path"]))
-        if dirs:
-            parts.append(
-                spark.read.option("basePath", f"{self.output_dir}/data").parquet(*dirs)
-            )
-        if not parts:
+        dirs = self.output_paths()
+        if not dirs:
             raise FileNotFoundError(f"no committed epochs under {self.output_dir}")
+        # output_paths() lists the compaction (if any) first
+        compacted = self.ledger.latest_compaction() is not None
+        parts = [spark.read.parquet(dirs[0])] if compacted else []
+        tail = dirs[1:] if compacted else dirs
+        if tail:
+            parts.append(
+                spark.read.option("basePath", f"{self.output_dir}/data").parquet(*tail)
+            )
         return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def read_dlq(self, spark) -> DataFrame:

@@ -8,7 +8,8 @@ mechanics (partition assignment, offset tracking, rebalance, pause=admission
 control) is owned by the Structured Streaming source connector; the engine's
 seam is just *which* connector + options. ``StreamSource`` makes that seam a
 tested object rather than a docstring claim: the same ``StreamProcessor``
-runs over file, rate, kafka, or iceberg sources by swapping the source.
+runs over file, rate, kafka, or iceberg sources by swapping the source
+(the parquet file source is ``processor.FileStreamSource``).
 
 Admission control (the reference's backpressure/pause analog) is the
 per-trigger cap option: maxFilesPerTrigger / maxOffsetsPerTrigger /
@@ -47,22 +48,6 @@ class StreamSource:
             reader = reader.option(k, str(v))
         df = reader.load(self.path) if self.path is not None else reader.load()
         return self.decode(df) if self.decode is not None else df
-
-
-def file_source(
-    path: str, schema: T.StructType, max_files_per_trigger: int = 1
-) -> StreamSource:
-    """Parquet-directory stream with bounded admission (backpressure knob).
-
-    The sandbox stand-in for a broker: one file per micro-batch gives
-    deterministic epoch slicing for the exactly-once tests.
-    """
-    return StreamSource(
-        format="parquet",
-        schema=schema,
-        path=path,
-        options={"maxFilesPerTrigger": str(max_files_per_trigger)},
-    )
 
 
 def rate_source(rows_per_second: int = 1000, num_partitions: int = 8) -> StreamSource:

@@ -22,15 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def materialize(df) -> int:
-    from pyspark.sql import functions as F
-
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("chk"),
-    ).collect()[0]
-    return row["n"]
+from bench import materialize  # noqa: E402 — the frozen bench's checksum action
 
 
 def noop_write(df) -> int:

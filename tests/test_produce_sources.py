@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from arroyo_spark.streaming import (
     METRIC_MAP,
-    file_source,
+    FileStreamSource,
     kafka_source,
     iceberg_source,
     produce_chain,
@@ -48,7 +48,7 @@ def test_produce_chain_two_stage_dag(spark, stream_dir, tmp_path):
     root = str(tmp_path / "chain")
     sinks = produce_chain(
         spark,
-        source=file_source(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
+        source=FileStreamSource(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
         stages=[
             ("norm", lambda df: df.filter(F.col("role") != "system")),
             # per-epoch (arroyo-Reduce-style) aggregation happens INSIDE the

@@ -29,7 +29,6 @@ from arroyo_spark.streaming import (
     FileStreamSource,
     OffsetsLedger,
     StreamProcessor,
-    file_source,
     produce_chain,
 )
 from arroyo_spark.synth import transcripts
@@ -108,7 +107,7 @@ def test_pipe_topic_source_rejects_orphan_epoch(spark, stream_dir, tmp_path):
     root = str(tmp_path / "chain")
     produce_chain(
         spark,
-        source=file_source(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
+        source=FileStreamSource(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
         stages=[("norm", lambda df: df.filter(F.col("role") != "system"))],
         root=root,
     )
@@ -341,7 +340,7 @@ def test_sink_persists_schema_for_topic_source(spark, stream_dir, tmp_path):
     root = str(tmp_path / "schemachain")
     produce_chain(
         spark,
-        source=file_source(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
+        source=FileStreamSource(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
         stages=[("norm", lambda df: df.filter(F.col("role") != "system"))],
         root=root,
     )

@@ -107,17 +107,25 @@ def test_sink_fast_path_metrics_and_output(spark, tmp_path):
     assert len(ledger.epochs()) == 2
 
 
-def test_sink_lineage_fast_path_offsets_and_counts(spark, tmp_path):
+@pytest.mark.parametrize("dlq", [False, True], ids=["fast_path", "dlq_path"])
+def test_sink_lineage_fast_path_offsets_and_counts(spark, tmp_path, dlq):
     """Lineage epochs (partition/offset columns) also run single-job: the
     per-known-partition next-offsets come out of observe(); an unknown
     partition triggers the one-time rebalance fallback; a filtering
     transform must NOT shrink run.count (observe sits below it and
-    pushdown does not cross CollectMetrics)."""
+    pushdown does not cross CollectMetrics).
+
+    With ``valid=F.lit(True)`` the sink takes the DLQ path instead, which
+    computes the same epoch stats with a plain agg before any write: the
+    ledger must come out identical across the rebalance and the restart."""
+    valid = F.lit(True) if dlq else None
     ledger = OffsetsLedger(str(tmp_path), "lin")
     sink = ExactlyOnceSink(
         output_dir=str(tmp_path / "lin"),
         ledger=ledger,
         transform=lambda df: df.filter(F.col("id") % 2 == 0),
+        valid=valid,
+        payload_col="id",  # the DLQ split copies a payload; these rows have no text
     )
 
     def batch(parts: dict[int, range]):
@@ -148,6 +156,8 @@ def test_sink_lineage_fast_path_offsets_and_counts(spark, tmp_path):
         output_dir=str(tmp_path / "lin"),
         ledger=ledger,
         transform=lambda df: df.filter(F.col("id") % 2 == 0),
+        valid=valid,
+        payload_col="id",
     )
     sink2(batch({0: range(31, 40), 2: range(4, 6)}), 3)
     assert ledger.committed_offsets() == {0: 40, 1: 8, 2: 6}

@@ -442,62 +442,6 @@ def test_redact_pii_spans(spark):
     assert got == "mail <EMAIL> call <PHONE> ssn <SSN> end"
 
 
-# -- StreamProcessor scheduler_pool (FAIR pool-per-query, engine seam) -------
-
-
-def test_scheduler_pool_set_at_start_and_restored(spark, tmp_path):
-    """scheduler_pool must be the thread-local at writer.start() (the
-    MicroBatchExecution thread inherits it there) and the caller's prior
-    value must be restored afterwards — so composing several processors on
-    one driver thread assigns each query its own FAIR pool.
-
-    Measured basis (BENCH/scaling_pool_r5_fair.jsonl): pool-per-query FAIR
-    improved both legs of the 2->8-core scaling pair vs FIFO.
-    """
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
-    from arroyo_spark.streaming import ExactlyOnceSink, OffsetsLedger
-    from arroyo_spark.streaming.processor import FileStreamSource, StreamProcessor
-
-    src = str(tmp_path / "src")
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, v string")
-    df.coalesce(1).write.parquet(src)
-
-    sc = spark.sparkContext
-    real_start = DataStreamWriter.start
-    seen: list[str | None] = []
-
-    def spying_start(self, *a, **kw):
-        seen.append(sc.getLocalProperty("spark.scheduler.pool"))
-        return real_start(self, *a, **kw)
-
-    ledger = OffsetsLedger(str(tmp_path), "pool_job")
-    sink = ExactlyOnceSink(output_dir=f"{tmp_path}/out", ledger=ledger)
-    proc = StreamProcessor(
-        spark=spark,
-        source=FileStreamSource(src, df.schema, max_files_per_trigger=1),
-        sink=sink,
-        checkpoint_dir=f"{tmp_path}/ckpt",
-        query_name="pool_q",
-        scheduler_pool="agg_pool",
-    )
-
-    sc.setLocalProperty("spark.scheduler.pool", "caller_pool")
-    try:
-        DataStreamWriter.start = spying_start
-        try:
-            proc.run_until_complete(timeout=120)
-        finally:
-            DataStreamWriter.start = real_start
-        # the query thread saw the pool; the caller thread got its value back
-        assert seen == ["agg_pool"]
-        assert sc.getLocalProperty("spark.scheduler.pool") == "caller_pool"
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
-
-    assert sink.read_output(spark).count() == 3
-
-
 def test_resize_images_floor_average_and_cross_container(spark):
     """resize_images: 2x2 floor-average pooling, PPM re-encode, exact bytes.
 

@@ -1,6 +1,6 @@
 """Memory-bandwidth ladder — the quietness probe that actually matters.
 
-Round-4 finding: the pure-ALU cpu_ladder kernel is blind to the host
+Round-4 finding: a pure-ALU ladder kernel is blind to the host
 contention that throttles the streaming job. Evidence: a window with
 record ALU numbers (4-proc 33.5M ops/s, 16-proc 115.6M — both session
 maxima) produced the session's WORST job legs (36.6k t/s at local[4]).
