@@ -2,8 +2,8 @@
 
 Local mode is the sandbox stand-in for a multi-executor cluster: we design
 for partition-parallel execution (AQE, skew-join handling, Arrow batching)
-and verify scaling by running the same job at two parallelism levels
-(local[8] vs local[32] ~= N vs 4N executors).
+and verify scaling by running the same job at N and 4N cores (``perfbench``
+at ``SPARK_GRAFT_CPUS=N`` and ``=4N``).
 """
 
 from __future__ import annotations
@@ -26,10 +26,7 @@ def get_spark(
     on a real cluster this would be sized to ~2-3x total executor cores).
     """
     if shuffle_partitions is None:
-        if isinstance(cores, int):
-            shuffle_partitions = max(cores, 8)
-        else:
-            shuffle_partitions = os.cpu_count() or 32
+        shuffle_partitions = cores if isinstance(cores, int) else os.cpu_count() or 32
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -155,6 +155,64 @@ def test_crash_restart_resumes_exactly_once(spark, stream_dir, batch_df, tmp_pat
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
+def test_restart_keeps_the_checkpoints_state_partitions(spark, stream_dir, tmp_path):
+    """Spark pins the shuffle-partition count into a checkpoint. A windowed
+    aggregation checkpoint created at 8 partitions restarts exactly-once
+    under a session set to 4 and keeps its 8 state stores; a fresh
+    checkpoint takes the session's 4."""
+    out = str(tmp_path)
+
+    def windows(df):
+        return (
+            df.withWatermark("ts", "30 seconds")
+            .groupBy(F.window("ts", "2 minutes").alias("win"), "conv_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("win.start").alias("ws"), "conv_id", "n")
+        )
+
+    def start(job, sink_cls=ExactlyOnceSink):
+        ledger = OffsetsLedger(out, job)
+        sink = sink_cls(output_dir=f"{out}/{job}", ledger=ledger)
+        q = StreamProcessor(
+            spark=spark,
+            source=FileStreamSource(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
+            sink=sink,
+            checkpoint_dir=f"{out}/{job}/checkpoint",
+            pipeline=windows,
+        ).start(drain=True)
+        return q, sink, ledger
+
+    def state_partitions(q):
+        return {so["numShufflePartitions"] for p in q.recentProgress for so in p["stateOperators"]}
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        q, _, ledger = start("pinned", CrashingSink)
+        with pytest.raises(Exception, match="injected crash"):
+            q.awaitTermination()
+        assert len(ledger.epochs()) == 2
+        assert state_partitions(q) == {8}
+
+        spark.conf.set(key, "4")
+        resumed, sink, ledger = start("pinned")
+        resumed.awaitTermination()
+        assert state_partitions(resumed) == {8}
+        fresh, fresh_sink, fresh_ledger = start("fresh")
+        fresh.awaitTermination()
+        assert state_partitions(fresh) == {4}
+    finally:
+        spark.conf.set(key, before)
+
+    assert ledger.epochs() == fresh_ledger.epochs()
+    assert ledger.committed_offsets() == fresh_ledger.committed_offsets()
+    got = [tuple(r) for r in sink.read_output(spark).select("ws", "conv_id", "n").collect()]
+    want = [tuple(r) for r in fresh_sink.read_output(spark).select("ws", "conv_id", "n").collect()]
+    assert got and len(set(got)) == len(got)  # every window once
+    assert sorted(got) == sorted(want)
+
+
 def test_offsets_advance_through_fully_filtered_stream(spark, stream_dir, batch_df, tmp_path):
     """FilterStep sentinel semantics (filter.py:29-46): even when every row
     is dropped, committed offsets keep advancing."""

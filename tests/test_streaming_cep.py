@@ -187,9 +187,21 @@ def test_stateful_match_completes_across_epochs(spark, tmp_path):
     # k3 never completes: B/C fall outside within of its anchor
 
 
+# degenerate rows, one list per epoch: a conversation with a NULL key (its
+# chain spans epochs, so the NULL key is carried in state) and rows whose
+# step condition is NULL (ev NULL: no step matches)
+DEGENERATE = [
+    [(None, _ts(1), 0, "A"), ("k4", _ts(1), 0, None), ("k4", _ts(2), 1, "A")],
+    [(None, _ts(2), 1, None), (None, _ts(3), 2, "B")]
+    + [("k4", _ts(3), 2, None), ("k4", _ts(4), 3, "B")],
+    [(None, _ts(4), 3, "C"), ("k4", _ts(5), 4, None), ("k4", _ts(6), 5, "C")],
+]
+
+
 @pytest.mark.parametrize("within", [None, 600.0])
 def test_stateful_match_equals_batch(spark, tmp_path, within):
-    all_rows = EPOCH1 + EPOCH2 + EPOCH3
+    epochs = [rows + extra for rows, extra in zip([EPOCH1, EPOCH2, EPOCH3], DEGENERATE)]
+    all_rows = [r for rows in epochs for r in rows]
     batch = match_sequence(
         spark.createDataFrame(all_rows, SCHEMA),
         key="k",
@@ -201,7 +213,8 @@ def test_stateful_match_equals_batch(spark, tmp_path, within):
         r["k"]: (r["a_ts"].timestamp(), r["b_ts"].timestamp(), r["c_ts"].timestamp())
         for r in batch
     }
-    got_rows = _run_stream(spark, tmp_path, [EPOCH1, EPOCH2, EPOCH3], within_s=within)
+    assert None in want and "k4" in want
+    got_rows = _run_stream(spark, tmp_path, epochs, within_s=within)
     got = {r["k"]: (r["a_ts"], r["b_ts"], r["c_ts"]) for r in got_rows}
     assert got == want and len(got_rows) == len(got)
 
@@ -307,9 +320,22 @@ def test_stateful_runs_idle_timer_emits_open_run(spark, tmp_path):
 
 def test_stateful_match_bigint_key(spark, tmp_path):
     """Regression: the output key field carries the source column's type —
-    a bigint key must emit, not crash Arrow serialization."""
+    a bigint key must emit, not crash Arrow serialization. A key past 2**53
+    that shares its key group with the NULL key comes out exact (pandas
+    would hold that group's keys as float64 if the NULL reached it)."""
+    from arroyo_spark.streaming.cep import KEY_GROUPS
+
+    def group(c):
+        return F.pmod(F.xxhash64(c), F.lit(KEY_GROUPS))
+
+    big = (
+        spark.range(1 << 12)
+        .select((F.col("id") * 2 + (1 << 60) + 1).alias("k"))  # odd: no float64 holds it
+        .filter(group(F.col("k")) == group(F.lit(None).cast("bigint")))
+        .first()["k"]
+    )
     schema = "k bigint, ts timestamp, i int, ev string"
-    rows = [(7, _ts(1), 0, "A"), (7, _ts(2), 1, "B"), (7, _ts(3), 2, "C")]
+    rows = [(k, _ts(1 + j), j, ev) for k in (7, big, None) for j, ev in enumerate("ABC")]
     src = tmp_path / "src"
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / "epoch=0"))
     stream = spark.readStream.schema(schema).parquet(str(src / "*"))
@@ -324,5 +350,266 @@ def test_stateful_match_bigint_key(spark, tmp_path):
     )
     q.awaitTermination()
     got = spark.sql("SELECT * FROM cep_bigint").collect()
-    assert [(r["k"], r["c_ts"]) for r in got] == [(7, _ts(3).timestamp())]
+    assert len(got) == 3
+    assert {(r["k"], r["c_ts"]) for r in got} == {(k, _ts(3).timestamp()) for k in (7, big, None)}
     assert dict(spark.sql("SELECT * FROM cep_bigint").dtypes)["k"] == "bigint"
+
+
+# -- the key-group fold, without Spark ------------------------------------------
+#
+# Reference: the per-key state functions the key-group driver replaced, one
+# call per key with its rows in (ts, tiebreaker) order, and Spark's per-key
+# driver around them. The group fold must give the same state, timers and
+# emissions for every key of the group.
+
+
+def _timer(at_s, wm_ms):
+    return max(int(at_s * 1000), wm_ms + 1)
+
+
+def _ref_sequence(k, within_s, evict_after_s, use_timeouts):
+    def ref(state, rows, timed_out, wm_ms):
+        if timed_out:
+            return None, None, []
+        chain, emitted = (list(state[:-1]), state[-1]) if state else ([None] * k, False)
+        if emitted:
+            timer = None
+            if use_timeouts and evict_after_s is not None:
+                timer = _timer(chain[-1] + evict_after_s, wm_ms)
+            return state, timer, []
+        for ts, flags in rows:
+            upd = {}
+            if flags[0] and (chain[0] is None or ts < chain[0]):
+                upd[0] = ts
+            for i in range(1, k):
+                if (
+                    chain[i] is None
+                    and flags[i]
+                    and chain[i - 1] is not None
+                    and (within_s is None or ts <= chain[0] + within_s)
+                ):
+                    upd[i] = ts
+            for i, v in upd.items():
+                chain[i] = v
+            if chain[-1] is not None:
+                break
+        done = chain[-1] is not None
+        if not done and chain[0] is None:
+            return None, None, []
+        timer = None
+        if use_timeouts:
+            if done and evict_after_s is not None:
+                timer = _timer(chain[-1] + evict_after_s, wm_ms)
+            elif not done and within_s is not None:
+                timer = _timer(chain[0] + within_s, wm_ms)
+        return (*chain, done), timer, [tuple(chain)] if done else []
+
+    return ref
+
+
+def _ref_runs(min_len, idle_close_s, use_timeouts):
+    def ref(state, rows, timed_out, wm_ms):
+        run, out = state, []
+        if timed_out:
+            return None, None, [run] if run[2] >= min_len else []
+        for ts, (hit,) in rows:
+            if hit:
+                run = (ts, ts, 1) if run is None else (run[0], ts, run[2] + 1)
+            elif run is not None:
+                if run[2] >= min_len:
+                    out.append(run)
+                run = None
+        if run is None:
+            return None, None, out
+        timer = None
+        if use_timeouts and idle_close_s is not None:
+            timer = _timer(run[1] + idle_close_s, wm_ms)
+        return run, timer, out
+
+    return ref
+
+
+def _ref_absence(within_s):
+    def ref(state, rows, timed_out, wm_ms):
+        pending, out = list(state or ()), []
+        wm = wm_ms / 1000.0
+        for ts, (fa, fb) in rows:
+            if fb and pending:
+                out.extend((a, ts) for a in pending if ts > a + within_s)
+                pending = []
+            if fa:
+                pending.append(ts)
+        still = [a for a in pending if wm <= a + within_s]
+        out.extend((a, None) for a in pending if wm > a + within_s)
+        if not still:
+            return None, None, out
+        return tuple(still), _timer(min(still) + within_s, wm_ms), out
+
+    return ref
+
+
+def _ref_group(ref, prev, rows, wm_ms):
+    """Spark's per-key driver: a key with rows is folded; a key without rows
+    whose timer is below the watermark times out; any other key is kept."""
+    state, out = {}, []
+    for key in set(prev) | set(rows):
+        st, timer = prev.get(key, (None, None))
+        emitted = []
+        if key in rows:
+            in_order = sorted(rows[key], key=lambda r: r[:2])  # (ts, tiebreaker)
+            st, timer, emitted = ref(st, [(ts, fl) for ts, _, fl in in_order], False, wm_ms)
+        elif wm_ms is not None and timer is not None and timer < wm_ms:
+            st, timer, emitted = ref(st, [], True, wm_ms)
+        if st is not None:
+            state[key] = (st, timer)
+        out += [(key, *e) for e in emitted]
+    return state, sorted(out, key=str)
+
+
+def _run_group_fold(fold, fields, prev, rows, wm_ms, n_flags, encode, decode):
+    """The key-group fold over the same input, in and out of the reference's
+    per-key form (``encode``/``decode`` map one key's state)."""
+    import pandas as pd
+
+    from arroyo_spark.streaming.cep import _fold_group
+
+    stored = [(key, encode(st), 0 if t is None else t) for key, (st, t) in prev.items()]
+    table = (
+        [key for key, _, _ in stored],
+        [t for _, _, t in stored],
+        *[[st[j] for _, st, _ in stored] for j in range(len(fields))],
+    )
+    flat = [(key, *r) for key, rs in rows.items() for r in rs]
+    pdf = pd.DataFrame(
+        {
+            "_k": [r[0] for r in flat],
+            "_ts": [float(r[1]) for r in flat],
+            "_tb0": [float(r[2]) for r in flat],
+            # bit i: flag i is TRUE (a NULL flag packs as unset, as in _flag_bits)
+            "_f": [sum(1 << i for i in range(n_flags) if r[3][i] is True) for r in flat],
+        }
+    )
+    shuffled = pdf.sample(frac=1, random_state=0)
+    new, group_timer, out = _fold_group(fold, fields, "k", table, shuffled, 1, wm_ms)
+    state = {}
+    if new is not None:
+        for j, key in enumerate(new[0]):
+            state[key] = (decode(tuple(col[j] for col in new[2:])), new[1][j] or None)
+        live = [t for t in new[1] if t]
+        assert group_timer == (min(live) if live else None)
+    got = []
+    if out is not None:  # NaN (an absent second_ts) as None
+        got = [tuple(None if v != v else v for v in r) for r in out.to_numpy(object).tolist()]
+    return state, sorted(got, key=str)
+
+
+def _random_rows(rng, keys, n_flags, p_true=0.4, t0=0.0):
+    """Per key: 0-6 rows ``(ts, tiebreaker, flags)``, shuffled; a flag is
+    NULL one time in ten."""
+    rows = {}
+    for key in keys:
+        n = int(rng.integers(0, 7))
+        # few distinct ts: ties, broken by the (distinct) tiebreaker
+        tss = t0 + rng.integers(0, 6, n) * 10.0
+        flags = [
+            tuple(
+                bool(rng.random() < p_true) if rng.random() > 0.1 else None
+                for _ in range(n_flags)
+            )
+            for _ in range(n)
+        ]
+        if n:
+            tbs = rng.permutation(n)
+            rows[key] = [(float(t), float(tb), fl) for t, tb, fl in zip(tss, tbs, flags)]
+    return rows
+
+
+KEYS = ["a", "b", "c", "d", "e", "f", None]
+
+
+@pytest.mark.parametrize("seed", range(40))
+def test_group_fold_sequence_equals_per_key_loop(seed):
+    """Seeded random groups: ts ties broken by the tiebreaker, within_s,
+    partial chains in state, keys already emitted, rows older than a stored
+    anchor, completion mid-batch, NULL flags, a NULL key, and (with
+    timeouts) keys expiring in a call they have no rows in."""
+    import numpy as np
+
+    from arroyo_spark.streaming.cep import _sequence_fields, _sequence_fold
+
+    rng = np.random.default_rng(seed)
+    k = int(rng.integers(2, 5))
+    within_s = [None, 20.0][seed % 2]
+    use_timeouts = seed % 4 >= 2
+    evict_after_s = 15.0 if use_timeouts and seed % 8 >= 6 else None
+    wm_ms = int(rng.integers(0, 30)) * 1000 if use_timeouts else None
+    prev = {}
+    for key in KEYS:
+        if rng.random() < 0.6:
+            n_set = int(rng.integers(1, k + 1))  # k: emitted
+            times = sorted(float(t) for t in rng.integers(0, 50, n_set))
+            chain = tuple(times + [None] * (k - n_set))
+            timer = int(rng.integers(1, 30)) * 1000 if use_timeouts and rng.random() < 0.7 else None
+            prev[key] = ((*chain, n_set == k), timer)
+    rows = _random_rows(rng, KEYS, k)
+    want = _ref_group(_ref_sequence(k, within_s, evict_after_s, use_timeouts), prev, rows, wm_ms)
+
+    def encode(st):
+        return (st[-1], *[np.nan if t is None else t for t in st[:-1]])
+
+    def decode(st):
+        return (*[None if t != t else t for t in st[1:]], st[0])
+
+    got = _run_group_fold(
+        _sequence_fold([f"s{i}" for i in range(k)], within_s, evict_after_s),
+        _sequence_fields(k), prev, rows, wm_ms, k, encode, decode,
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_group_fold_runs_equals_per_key_loop(seed):
+    import numpy as np
+
+    from arroyo_spark.streaming.cep import _RUNS_FIELDS, _runs_fold
+
+    rng = np.random.default_rng(seed)
+    min_len = int(rng.integers(1, 4))
+    use_timeouts = seed % 2 == 1
+    idle = 20.0 if use_timeouts else None
+    wm_ms = int(rng.integers(0, 30)) * 1000 if use_timeouts else None
+    prev = {}
+    for key in KEYS:
+        if rng.random() < 0.5:
+            s, cnt = float(rng.integers(0, 10)), int(rng.integers(1, 4))
+            timer = int(rng.integers(1, 30)) * 1000 if use_timeouts else None
+            prev[key] = ((s, s + 5.0, cnt), timer)
+    rows = _random_rows(rng, KEYS, 1, p_true=0.7, t0=10.0)
+    want = _ref_group(_ref_runs(min_len, idle, use_timeouts), prev, rows, wm_ms)
+    got = _run_group_fold(
+        _runs_fold(min_len, idle), _RUNS_FIELDS, prev, rows, wm_ms, 1, lambda st: st, tuple
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_group_fold_absence_equals_per_key_loop(seed):
+    import numpy as np
+
+    from arroyo_spark.streaming.cep import _ABSENCE_FIELDS, _absence_fold
+
+    rng = np.random.default_rng(seed)
+    within_s = 20.0
+    wm_ms = int(rng.integers(0, 30)) * 1000
+    prev = {}
+    for key in KEYS:
+        if rng.random() < 0.5:
+            pending = tuple(sorted(float(t) for t in rng.integers(0, 10, int(rng.integers(1, 3)))))
+            prev[key] = (pending, int(rng.integers(1, 30)) * 1000)
+    rows = _random_rows(rng, KEYS, 2, t0=10.0)
+    want = _ref_group(_ref_absence(within_s), prev, rows, wm_ms)
+    got = _run_group_fold(
+        _absence_fold(("a", "b"), within_s), _ABSENCE_FIELDS, prev, rows, wm_ms, 2,
+        lambda st: (list(st),), lambda st: tuple(st[0]),
+    )
+    assert got == want
