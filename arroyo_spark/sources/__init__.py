@@ -6,7 +6,6 @@ from arroyo_spark.sources.layout import (  # noqa: F401
 )
 from arroyo_spark.sources.tables import (  # noqa: F401
     load_table,
-    register_views,
     transcripts_from_events,
     TRANSCRIPTS_FROM_EVENTS_SQL,
 )

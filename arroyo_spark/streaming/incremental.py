@@ -226,50 +226,22 @@ def epoch_ann_transform(
     (``ann_query_topk``), which also keeps the cap semantics identical to
     batch ``lsh_ann_topk`` over the same corpus.
     """
-    from arroyo_spark.operators.similarity import (
-        _infer_dim,
-        _np_bucket,
-        _np_norms,
-        _np_planes,
-        _np_stack,
-    )
+    from arroyo_spark.operators.similarity import _bucketize, _infer_dim, _np_planes
 
-    # infer the (constant) dimension at most ONCE across epochs: _infer_dim
-    # is a .first() driver job, and paying it per epoch is exactly the
-    # serial fixed cost perfbench's processor.serial_ms_p50 tracks (ADVICE r4 #4)
-    _dim_cache = {"d": dim, "W": None}
+    # the (constant) hyperplanes, built on the first epoch: inferring dim
+    # every epoch would add a .first() driver job to each trigger — the
+    # serial fixed cost perfbench's processor.serial_ms_p50 tracks
+    planes = []
 
     def transform(batch_df: DataFrame) -> DataFrame:
-        import pandas as pd
-
-        if _dim_cache["d"] is None:
-            _dim_cache["d"] = _infer_dim(batch_df, vec_col)
-        d = _dim_cache["d"]
-        if _dim_cache["W"] is None:
-            _dim_cache["W"] = _np_planes(n_planes, d, seed)
-        W = _dim_cache["W"]
-        idt = dict(batch_df.dtypes)[id_col]
-
-        # r6: bucket + norm in one Arrow kernel — the n_planes*dim-term
-        # SQL bucket expression cost ~0.4s of driver-side planning PER
-        # EPOCH (see lsh_ann_topk); same constants, same ordered
-        # projection, same bits (similarity._np_bucket docstring)
-        def rows(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = _np_stack(pdf[vec_col])
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "bucket": _np_bucket(V, W),
-                        "vec": list(V),
-                        "norm": _np_norms(V),
-                    }
-                )
-
-        return batch_df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col)).mapInPandas(
-            rows, f"{id_col} {idt}, bucket int, vec array<double>, norm double"
+        if not planes:
+            d = dim if dim is not None else _infer_dim(batch_df, vec_col)
+            planes.append(_np_planes(n_planes, d, seed))
+        return _bucketize(batch_df, id_col, vec_col, planes).select(
+            F.col("_id").alias(id_col),
+            "bucket",
+            F.col("_vec").alias("vec"),
+            F.col("_norm").alias("norm"),
         )
 
     return transform
@@ -320,104 +292,36 @@ def ann_query_topk(
     bucket cap over the full index, same zero-norm exclusion on both the
     query and neighbor sides, same (cosine DESC, neighbor_id) tie-break.
 
-    r6 plan shape (guide §4.2): index and query sides cogroup on the
-    bucket id into one Arrow-batched kernel that scores the query x
-    member grid with the similarity module's dimension-axis accumulation
-    (bit-identical to the old per-pair interpreted fold) and emits each
-    query's ranked top-k directly — a query lives in exactly one bucket,
-    so the per-bucket top-k IS the global answer and the corpus-wide
-    window disappears. Output schema matches ``lsh_ann_topk``:
-    (query_id, bucket, neighbor_id, cosine, rank).
+    Plan shape: index and query sides cogroup on the bucket id into one
+    Arrow kernel that scores each bucket's query x member grid and emits
+    each query's ranked top-k directly — a query lives in exactly one
+    bucket, so the per-bucket top-k IS the global answer. Output schema
+    matches ``lsh_ann_topk``: (query_id, bucket, neighbor_id, cosine,
+    rank).
     """
-    import pandas as pd
-
     from arroyo_spark.operators.similarity import (
+        _bucketize,
         _cap_buckets,
         _infer_dim,
-        _np_bucket,
-        _np_grid_dots,
-        _np_norms,
         _np_planes,
-        _np_stack,
-        _np_topk_rows,
+        _side,
+        _topk_frame,
     )
 
     d = dim if dim is not None else _infer_dim(queries_df, vec_col)
     store = _cap_buckets(sink.read_output(spark), max_bucket_size, "bucket")
     nb = store.filter(F.col("norm") > 0).select(
-        F.col(id_col).alias("_id"), "bucket", F.col("vec").alias("_vec"), F.col("norm").alias("_n")
+        F.col(id_col).alias("_id"),
+        "bucket",
+        F.col("vec").alias("_vec"),
+        F.col("norm").alias("_norm"),
     )
-    W = _np_planes(n_planes, d, seed)
+    planes = [_np_planes(n_planes, d, seed)]
+    q = _bucketize(queries_df, id_col, vec_col, planes).filter(F.col("_norm") > 0)
     idt = dict(queries_df.dtypes)[id_col]
 
-    # query-side bucket + norm in one kernel (zero-norm queries excluded,
-    # as before); same constants/bits as the index side
-    def q_rows(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _np_stack(pdf[vec_col])
-            nrm = _np_norms(V)
-            keep = nrm > 0
-            V, nrm = V[keep], nrm[keep]
-            ids = pdf[id_col].to_numpy()[keep]
-            if not len(ids):
-                continue
-            yield pd.DataFrame(
-                {
-                    "_id": ids,
-                    "bucket": _np_bucket(V, W),
-                    "_vec": list(V),
-                    "_n": nrm,
-                }
-            )
-
-    q = queries_df.select(
-        id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).mapInPandas(q_rows, f"_id {idt}, bucket int, _vec array<double>, _n double")
-    kk = int(k)
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "bucket": pd.Series([], dtype="int32"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-                "rank": pd.Series([], dtype="int32"),
-            }
-        )
-        if not len(left) or not len(right):
-            return empty
-        left = left.sort_values("_id", kind="mergesort")
-        B = _np_stack(left["_vec"])
-        bn = left["_n"].to_numpy(dtype=np.float64)
-        bids = left["_id"].to_numpy()
-        Q = _np_stack(right["_vec"])
-        qn = right["_n"].to_numpy(dtype=np.float64)
-        qids = right["_id"].to_numpy()
-        bucket = (left if len(left) else right)["bucket"].iloc[0]
-        res = []
-        ch = max(1, 4_000_000 // max(len(bids), 1))
-        for s in range(0, len(qids), ch):
-            cos = _np_grid_dots(Q[s : s + ch], B) / (qn[s : s + ch, None] * bn[None, :])
-            q_, nid, c, r = _np_topk_rows(qids[s : s + ch], bids, cos, kk, with_rank=True)
-            res.append(
-                pd.DataFrame(
-                    {
-                        "query_id": q_,
-                        "bucket": np.full(len(q_), bucket),
-                        "neighbor_id": nid,
-                        "cosine": c,
-                        "rank": r,
-                    }
-                )
-            )
-        return pd.concat(res, ignore_index=True) if res else empty
+    def score(key, left, right):
+        return _topk_frame(_side(right), _side(left), k, rank=True).assign(bucket=key[0])
 
     return (
         nb.groupBy("bucket")

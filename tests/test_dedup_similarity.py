@@ -260,7 +260,7 @@ def test_pq_ann_recall_and_compression(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200)
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(e, k=3).collect()}
-    rows = pq_ann_topk(e, k=3, m=16, k_codes=64, n_queries=None, dim=64).collect()
+    rows = pq_ann_topk(e, k=3, m=16, k_codes=64, n_queries=200, dim=64).collect()
     assert rows, "pq returned nothing"
     approx = {(r.query_id, r.neighbor_id) for r in rows}
     recall = len(exact & approx) / len(exact)
@@ -285,7 +285,7 @@ def test_pq_ann_recall_and_compression(spark):
     z = e.select("vec_id", "embedding").limit(20).union(
         spark.createDataFrame([(999999, [0.0] * 64)], "vec_id bigint, embedding array<double>")
     )
-    zr = pq_ann_topk(z, k=3, m=8, k_codes=16, n_queries=None, dim=64).collect()  # coarse: only exclusion matters here
+    zr = pq_ann_topk(z, k=3, m=8, k_codes=16, n_queries=21, dim=64).collect()  # coarse: only exclusion matters here
     assert all(r.query_id != 999999 and r.neighbor_id != 999999 for r in zr)
 
 

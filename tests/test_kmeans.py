@@ -146,3 +146,14 @@ def test_ivf_with_trained_centroids(spark, vecs):
     ivf_top1 = {r.query_id: r.neighbor_id for r in got if r.rank == 1}
     agree = sum(1 for q, n in ivf_top1.items() if exact.get(q) == n)
     assert agree / len(ivf_top1) == 1.0
+
+
+def test_ivf_centroid_order_does_not_matter(spark, vecs):
+    """Trained centroids in reverse cell order give the same rows: the
+    assigner sorts them, so probe ties still go to the lowest cell."""
+    from arroyo_spark.operators.similarity import ivf_ann_topk
+
+    cents = train_kmeans(vecs, k=3, n_iter=3, dim=4)
+    fwd = ivf_ann_topk(vecs, k=3, n_probe=2, dim=4, centroids=cents).collect()
+    rev = ivf_ann_topk(vecs, k=3, n_probe=2, dim=4, centroids=cents[::-1]).collect()
+    assert fwd and sorted(fwd) == sorted(rev)
