@@ -151,15 +151,18 @@ def _collected(rows):
     return _side(pd.DataFrame(rows, columns=["_id", "_vec", "_norm"]))
 
 
-def _grid(q, b, dots=_np_grid_dots):
+def _grid(q, b, dots=_np_grid_dots, row_cells: int = 0):
     """The cosine grid of query side ``q`` against base side ``b`` (both
     ``_side`` triples) in chunks of query rows, at most ``_GRID_CELLS``
     cells each unless one row is wider: yields (first row, chunk).
     ``dots(Q_chunk, B)`` scores the raw products — ``_np_grid_dots``, or
-    ADC with PQ tables as Q and codes as B. An empty query side still
-    yields one (0, nb) chunk, so consumers always get typed arrays."""
+    ADC with PQ tables as Q and codes as B. ``row_cells`` is what ``dots``
+    itself builds per query row (ADC's m x k_codes lookup table when it
+    makes the tables per chunk); the chunk height keeps that within the
+    budget too. An empty query side still yields one (0, nb) chunk, so
+    consumers always get typed arrays."""
     (_, Q, qn), (_, B, bn) = q, b
-    ch = max(1, _GRID_CELLS // max(len(bn), 1))
+    ch = max(1, _GRID_CELLS // max(len(bn), row_cells, 1))
     for s in range(0, max(len(qn), 1), ch):
         yield s, dots(Q[s : s + ch], B) / (qn[s : s + ch, None] * bn[None, :])
 
@@ -190,13 +193,15 @@ def _np_topk_rows(qids, nids, cos, k, with_rank):
     return out
 
 
-def _topk_frame(q, b, k: int, dots=_np_grid_dots, rank: bool = False) -> pd.DataFrame:
+def _topk_frame(
+    q, b, k: int, dots=_np_grid_dots, rank: bool = False, row_cells: int = 0
+) -> pd.DataFrame:
     """Each query's top-k neighbors in ``b``, self-pairs excluded, ties
     by neighbor id: a typed (query_id, neighbor_id, cosine[, rank]) frame,
-    empty when either side is."""
+    empty when either side is. ``dots``/``row_cells`` as in ``_grid``."""
     parts = [
         _np_topk_rows(q[0][s : s + len(cos)], b[0], cos, int(k), rank)
-        for s, cos in _grid(q, b, dots)
+        for s, cos in _grid(q, b, dots, row_cells)
     ]
     return _frame(("query_id", "neighbor_id", "cosine", "rank"), parts)
 
@@ -628,6 +633,20 @@ def pq_ann_topk(
     return _ranked(cand, k, "approx_cosine")
 
 
+def _ivfpq_cell_topk(pdf: pd.DataFrame, CW, m: int, sub: int, k: int) -> pd.DataFrame:
+    """One IVF cell of ``ivfpq_ann_topk``: encode the cell's members
+    (``_pr == 1``) against the global codebook ``CW`` and ADC-score every
+    probe row against them, local top-k. The lookup tables are built per
+    grid chunk, so the chunk height also bounds their rows x m x k_codes."""
+    bids, X, bn = _side(pdf[pdf["_pr"] == 1])
+
+    def adc(Q, codes):
+        return _np_adc(_np_pq_qtab(Q, CW, m, sub), codes)
+
+    members = (bids, _np_pq_codes(X, CW, m, sub), bn)
+    return _topk_frame(_side(pdf), members, k, adc, row_cells=m * len(CW))
+
+
 def ivfpq_ann_topk(
     df: DataFrame,
     k: int = 5,
@@ -665,15 +684,9 @@ def ivfpq_ann_topk(
     CW = _collected(head[:k_codes])[1]
     idt = dict(df.dtypes)[id_col]
 
-    def adc(Q, codes):
-        return _np_adc(_np_pq_qtab(Q, CW, m, sub), codes)
-
-    def score_cell(pdf):
-        bids, X, bn = _side(pdf[pdf["_pr"] == 1])
-        return _topk_frame(_side(pdf), (bids, _np_pq_codes(X, CW, m, sub), bn), k, adc)
-
     cand = _assign_cells(v, head[:n_cells], n_probe).groupBy("cell").applyInPandas(
-        score_cell, f"query_id {idt}, neighbor_id {idt}, cosine double"
+        lambda pdf: _ivfpq_cell_topk(pdf, CW, m, sub, k),
+        f"query_id {idt}, neighbor_id {idt}, cosine double",
     )
     return _ranked(cand, k, "approx_cosine")
 

@@ -54,6 +54,21 @@ def get_spark(
         # streaming state store: RocksDB would be the cluster choice; the
         # default HDFS-backed store is fine single-node and has no native dep
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
+        # checkpoint renames through FileSystem.rename, not the default
+        # FileContext manager: without Hadoop's native library, FileContext
+        # on the local file system forks a `readlink` process per rename
+        # (every state delta, checksum sidecar, offsets/commits/source log
+        # entry). JFR jdk.ProcessStart over a perfbench flagship run
+        # (4 cores): 1,856 of 2,616 process starts were readlink, and 0
+        # with this manager. Same file format; a second writer of a log
+        # entry is still refused. An overwrite is best effort, as Spark's
+        # contract allows: the Spark distribution's `file` scheme (Hive's
+        # ProxyLocalFileSystem) keeps an existing file, as HDFS does.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

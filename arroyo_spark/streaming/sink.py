@@ -232,13 +232,16 @@ class ExactlyOnceSink:
         self._write_schema_once(out)
         try:
             vals = obs.get
-            if vals.get("n", 0) == 0:
-                # a zeroed observation is UNVERIFIABLE, not trustworthy: a
-                # transform that lazily localCheckpoints the observed scan
-                # without an intervening shuffle makes obs.get silently
-                # return all-zero metrics (reproduced on Spark 4.1) rather
-                # than raise. Re-measure; genuinely empty epochs make this
-                # a no-op-priced agg over zero rows.
+            if vals.get("n", 0) == 0 and self.transform is not None:
+                # behind a transform a zeroed observation is UNVERIFIABLE:
+                # one that lazily localCheckpoints the observed scan without
+                # an intervening shuffle makes obs.get silently return
+                # all-zero metrics (reproduced on Spark 4.1) rather than
+                # raise. Re-measure. Without a transform the write consumed
+                # the observed plan itself, so zero is the true count — and
+                # the re-measure is not cheap: inside foreachBatch it
+                # recomputes the whole micro-batch (scan, features, shuffle,
+                # state store), on every epoch that emits nothing.
                 raise ValueError("zeroed observation — re-measure")
         except Exception:  # noqa: BLE001 — see below
             # the optimizer can REMOVE the CollectMetrics node when the

@@ -321,3 +321,76 @@ def test_ivfpq_recall_and_candidate_discipline(spark):
         rs.sort()
         cs = [c for _, c in rs]
         assert cs == sorted(cs, reverse=True)
+
+
+def _lsh_twin(pdf, n_planes: int, cap: int, zero_norm_first: bool) -> dict[str, set]:
+    """DuckDB twin of ``lsh_ann_topk`` (k=3) and ``embedding_dup_pairs``
+    (threshold 0.5) over ``pdf``'s (vec_id, embedding) rows, with the
+    bucket cap applied either to the raw mapping (zero-norm rows counted,
+    then dropped: the operators' documented rule) or after zero-norm rows
+    are dropped (the registry oracles' order)."""
+    import duckdb
+
+    from arroyo_spark.queries import _lsh_bucket_sql
+
+    dim = len(pdf["embedding"][0])
+    keep_first = "WHERE list_dot_product(e, e) > 0" if zero_norm_first else ""
+    keep_after = "" if zero_norm_first else "WHERE nrm > 0"
+    con = duckdb.connect()
+    con.register("t", pdf)
+    vb = f"""
+    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM t {keep_first}),
+    raw AS (
+      SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm,
+             cast({_lsh_bucket_sql(n_planes, dim)} AS int) AS bucket
+      FROM v QUALIFY count(*) OVER (PARTITION BY bucket) <= {cap}
+    ), vb AS (SELECT * FROM raw {keep_after})"""
+    topk = con.execute(f"""{vb},
+    scored AS (
+      SELECT q.vec_id AS query_id, q.bucket AS bucket, b.vec_id AS neighbor_id,
+             list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS cosine
+      FROM vb q JOIN vb b ON q.bucket = b.bucket AND q.vec_id <> b.vec_id
+    ), ranked AS (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, neighbor_id) AS rank
+      FROM scored
+    )
+    SELECT query_id, bucket, neighbor_id, cosine, rank FROM ranked WHERE rank <= 3""").fetchall()
+    pairs = con.execute(f"""{vb}
+    SELECT a.vec_id, b.vec_id, list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS c
+    FROM vb a JOIN vb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+    WHERE list_dot_product(a.e, b.e) / (a.nrm * b.nrm) >= 0.5""").fetchall()
+    return {"topk": set(topk), "pairs": set(pairs)}
+
+
+def test_zero_norm_rows_count_toward_the_bucket_cap(spark):
+    """``lsh_ann_topk`` and ``embedding_dup_pairs`` count zero-norm rows
+    toward ``max_bucket_size`` and drop them after it. One plane, two
+    buckets: 5 vectors in bucket 1; 4 vectors plus 3 zero vectors (a zero
+    projection is not > 0) in bucket 0. At cap 5 the zeros push bucket 0
+    over the cap, so it is dropped whole, where dropping zeros first would
+    keep it; at cap 7 it is kept and the zeros are still never scored."""
+    import numpy as np
+    import pandas as pd
+
+    from arroyo_spark.operators.similarity import _np_planes, embedding_dup_pairs
+
+    w = _np_planes(1, 8, 0)[0]
+    noise = np.random.default_rng(2).normal(scale=0.1, size=(9, 8))
+    vecs = [(s * w + n).round(3).tolist() for s, n in zip([1] * 5 + [-1] * 4, noise)]
+    vecs += [[0.0] * 8] * 3
+    pdf = pd.DataFrame({"vec_id": np.arange(12, dtype=np.int64), "embedding": vecs})
+    df = spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
+
+    for cap in (5, 7):
+        want = _lsh_twin(pdf, 1, cap, zero_norm_first=False)
+        topk = lsh_ann_topk(df, k=3, n_planes=1, max_bucket_size=cap, dim=8)
+        pairs = embedding_dup_pairs(df, threshold=0.5, n_planes=1, max_bucket_size=cap, dim=8)
+        assert {tuple(r) for r in topk.select(
+            "query_id", "bucket", "neighbor_id", "cosine", "rank").collect()} == want["topk"]
+        assert {tuple(r) for r in pairs.collect()} == want["pairs"]
+        ids = {r[0] for r in want["topk"]} | {r[2] for r in want["topk"]}
+        assert not ids & {9, 10, 11}  # zero vectors are never scored
+        assert bool(ids & {5, 6, 7, 8}) == (cap == 7)  # bucket 0 survives only at cap 7
+    # the data separates the two orders: dropping zeros first keeps bucket 0
+    assert _lsh_twin(pdf, 1, 5, zero_norm_first=True) != _lsh_twin(pdf, 1, 5, zero_norm_first=False)

@@ -107,6 +107,46 @@ def test_sink_fast_path_metrics_and_output(spark, tmp_path):
     assert len(ledger.epochs()) == 2
 
 
+def _jobs_run_by(spark, fn, group: str) -> int:
+    """How many Spark jobs ``fn()`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sink_empty_fast_path_epoch_is_one_job(spark, tmp_path):
+    """A no-transform epoch that emits no rows trusts its zero observation:
+    the data write is the epoch's only Spark job (a re-measure would run the
+    whole micro-batch again), and the ledger still records run.count 0.
+    ``id < 0`` is a filter the optimizer cannot fold to an empty relation,
+    so the observation is really taken."""
+    ledger = OffsetsLedger(str(tmp_path), "empty")
+    sink = ExactlyOnceSink(output_dir=str(tmp_path / "empty"), ledger=ledger)
+    df = spark.range(100).filter(F.col("id") < 0)
+    assert _jobs_run_by(spark, lambda: sink(df, 0), "empty_fast_path_epoch") == 1
+    assert ledger.entries()[0]["metrics"]["arroyo.consumer.run.count"] == 0.0
+    assert ledger.epochs() == [0]
+
+
+def test_sink_remeasures_a_zeroed_observation_behind_a_transform(spark, tmp_path):
+    """A transform that lazily localCheckpoints the observed frame makes
+    the observation read all zeros; behind a transform the sink re-measures,
+    so the ledger still gets the exact input count."""
+    ledger = OffsetsLedger(str(tmp_path), "ckpt")
+    sink = ExactlyOnceSink(
+        output_dir=str(tmp_path / "ckpt"),
+        ledger=ledger,
+        transform=lambda df: df.localCheckpoint(eager=False),
+    )
+    sink(spark.range(50), 0)
+    assert ledger.entries()[0]["metrics"]["arroyo.consumer.run.count"] == 50.0
+    assert sink.read_output(spark).count() == 50
+
+
 @pytest.mark.parametrize("dlq", [False, True], ids=["fast_path", "dlq_path"])
 def test_sink_lineage_fast_path_offsets_and_counts(spark, tmp_path, dlq):
     """Lineage epochs (partition/offset columns) also run single-job: the

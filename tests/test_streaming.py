@@ -10,6 +10,8 @@ and DLQ routing with fail-stop limits
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,7 +51,6 @@ def stream_dir(spark, tmp_path_factory):
         # flatten: move the parquet file up so the dir is a flat file listing
     # re-write as flat files (stream source lists files, not dirs)
     flat = tmp_path_factory.mktemp("stream_flat")
-    import glob
     import shutil
 
     for i in range(N_FILES):
@@ -155,6 +156,34 @@ def test_crash_restart_resumes_exactly_once(spark, stream_dir, batch_df, tmp_pat
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
+def _windows(df):
+    return (
+        df.withWatermark("ts", "30 seconds")
+        .groupBy(F.window("ts", "2 minutes").alias("win"), "conv_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("win.start").alias("ws"), "conv_id", "n")
+    )
+
+
+def _start_windows(spark, stream_dir, out, job, sink_cls=ExactlyOnceSink):
+    """A windowed aggregation over the file stream, one file per epoch,
+    into an exactly-once sink; returns (query, sink, ledger)."""
+    ledger = OffsetsLedger(out, job)
+    sink = sink_cls(output_dir=f"{out}/{job}", ledger=ledger)
+    q = StreamProcessor(
+        spark=spark,
+        source=FileStreamSource(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
+        sink=sink,
+        checkpoint_dir=f"{out}/{job}/checkpoint",
+        pipeline=_windows,
+    ).start(drain=True)
+    return q, sink, ledger
+
+
+def _window_rows(spark, sink):
+    return [tuple(r) for r in sink.read_output(spark).select("ws", "conv_id", "n").collect()]
+
+
 def test_restart_keeps_the_checkpoints_state_partitions(spark, stream_dir, tmp_path):
     """Spark pins the shuffle-partition count into a checkpoint. A windowed
     aggregation checkpoint created at 8 partitions restarts exactly-once
@@ -162,25 +191,8 @@ def test_restart_keeps_the_checkpoints_state_partitions(spark, stream_dir, tmp_p
     checkpoint takes the session's 4."""
     out = str(tmp_path)
 
-    def windows(df):
-        return (
-            df.withWatermark("ts", "30 seconds")
-            .groupBy(F.window("ts", "2 minutes").alias("win"), "conv_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("win.start").alias("ws"), "conv_id", "n")
-        )
-
     def start(job, sink_cls=ExactlyOnceSink):
-        ledger = OffsetsLedger(out, job)
-        sink = sink_cls(output_dir=f"{out}/{job}", ledger=ledger)
-        q = StreamProcessor(
-            spark=spark,
-            source=FileStreamSource(stream_dir, STREAM_SCHEMA, max_files_per_trigger=1),
-            sink=sink,
-            checkpoint_dir=f"{out}/{job}/checkpoint",
-            pipeline=windows,
-        ).start(drain=True)
-        return q, sink, ledger
+        return _start_windows(spark, stream_dir, out, job, sink_cls)
 
     def state_partitions(q):
         return {so["numShufflePartitions"] for p in q.recentProgress for so in p["stateOperators"]}
@@ -207,9 +219,89 @@ def test_restart_keeps_the_checkpoints_state_partitions(spark, stream_dir, tmp_p
 
     assert ledger.epochs() == fresh_ledger.epochs()
     assert ledger.committed_offsets() == fresh_ledger.committed_offsets()
-    got = [tuple(r) for r in sink.read_output(spark).select("ws", "conv_id", "n").collect()]
-    want = [tuple(r) for r in fresh_sink.read_output(spark).select("ws", "conv_id", "n").collect()]
+    got, want = _window_rows(spark, sink), _window_rows(spark, fresh_sink)
     assert got and len(set(got)) == len(got)  # every window once
+    assert sorted(got) == sorted(want)
+
+
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path):
+    """The CheckpointFileManager Spark builds for ``path`` under the
+    session's conf (unwrapped: the state store adds its checksum wrapper
+    on top of this one)."""
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    factory = getattr(getattr(pkg, "CheckpointFileManager$"), "MODULE$")
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    return factory.create(jvm.org.apache.hadoop.fs.Path(path), hconf)
+
+
+def test_checkpoint_files_go_through_the_filesystem_api(spark, tmp_path):
+    """The session's checkpoint manager renames through FileSystem.rename
+    (the FileContext default forks a `readlink` per rename when Hadoop's
+    native library is missing). A second writer of an existing file is
+    still refused. An overwrite is Spark's best effort: it never raises and
+    leaves one complete file. This Spark distribution's `file` scheme
+    (Hive's ProxyLocalFileSystem) refuses a rename onto an existing file,
+    as HDFS does, so there the first version stays."""
+    m = _checkpoint_manager(spark, str(tmp_path))
+    assert m.getClass().getName() == f"{CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+
+    def write(byte, overwrite):
+        out = m.createAtomic(path, overwrite)
+        out.write(byte)
+        out.close()
+
+    write(1, False)
+    with pytest.raises(Exception, match="already exists"):
+        write(2, False)
+    assert (tmp_path / "0").read_bytes() == b"\x01"
+    write(3, True)
+    assert (tmp_path / "0").read_bytes() in (b"\x01", b"\x03")
+
+
+class _CrashBeforeLedgerSink(ExactlyOnceSink):
+    """Writes epoch 1's data (so its state version is committed), then
+    dies before the ledger commit."""
+
+    def _finalize(self, epoch_id, *args, **kwargs):
+        if epoch_id == 1:
+            raise RuntimeError("injected crash")
+        super()._finalize(epoch_id, *args, **kwargs)
+
+
+def test_filecontext_checkpoint_restarts_under_the_filesystem_manager(
+    spark, stream_dir, tmp_path
+):
+    """A windowed-aggregation checkpoint written by the FileContext manager
+    restarts exactly-once under the FileSystem manager, including the
+    replay of an epoch whose state files the crashed run already wrote."""
+    out = str(tmp_path)
+    fc = f"{CHECKPOINTING}.FileContextBasedCheckpointFileManager"
+    before = spark.conf.get(MANAGER_KEY)
+    try:
+        spark.conf.set(MANAGER_KEY, fc)
+        assert _checkpoint_manager(spark, out).getClass().getName() == fc
+        q, _, ledger = _start_windows(spark, stream_dir, out, "legacy", _CrashBeforeLedgerSink)
+        with pytest.raises(Exception, match="injected crash"):
+            q.awaitTermination()
+    finally:
+        spark.conf.set(MANAGER_KEY, before)
+    assert ledger.epochs() == [0]
+    # epoch 1 committed state version 2 before the crash; the replay writes it again
+    assert glob.glob(f"{out}/legacy/checkpoint/state/0/*/2.delta")
+
+    resumed, sink, ledger = _start_windows(spark, stream_dir, out, "legacy")
+    resumed.awaitTermination()
+    fresh, fresh_sink, fresh_ledger = _start_windows(spark, stream_dir, out, "fresh")
+    fresh.awaitTermination()
+    assert ledger.epochs() == fresh_ledger.epochs()
+    got, want = _window_rows(spark, sink), _window_rows(spark, fresh_sink)
+    assert got and len(set(got)) == len(got)
     assert sorted(got) == sorted(want)
 
 

@@ -136,6 +136,52 @@ def test_adc_scoring_is_chunked_like_the_dot_grid(monkeypatch):
     assert max(cells) <= 300 and len(cells) == 10
 
 
+def test_ivfpq_cell_tables_stay_within_budget(monkeypatch):
+    """An IVF cell with few members and many probe rows: the ADC lookup
+    tables (rows x m x k_codes) the cell scorer builds per chunk stay
+    within _GRID_CELLS, like every dot grid, and the output is bit for bit
+    the unchunked answer."""
+    rng = np.random.default_rng(13)
+    m, sub, k = 4, 2, 3
+    CW = _vectors(rng, 16)  # m * k_codes = 64 table cells per probe row
+    n = 60
+    pdf = pd.DataFrame(
+        {"_id": np.arange(n, dtype=np.int64), "_vec": [list(v) for v in _vectors(rng, n)],
+         "_pr": np.where(np.arange(n) % 20 == 0, 1, 2)}  # 3 members, 57 probes
+    )
+    pdf["_norm"] = [math.sqrt(_fold(v, v)) for v in pdf["_vec"]]
+    q, (bids, X, bn) = sim._side(pdf), sim._side(pdf[pdf["_pr"] == 1])
+    whole = sim._np_adc(sim._np_pq_qtab(q[1], CW, m, sub), sim._np_pq_codes(X, CW, m, sub))
+    cos = whole / (q[2][:, None] * bn[None, :])
+    want = sim._frame(
+        ("query_id", "neighbor_id", "cosine"), [sim._np_topk_rows(q[0], bids, cos, k, False)]
+    )
+
+    budget = 200
+    monkeypatch.setattr(sim, "_GRID_CELLS", budget)
+    cells = []
+    qtab, grid_dots = sim._np_pq_qtab, sim._np_grid_dots
+
+    def counted_qtab(Q, *a):
+        T = qtab(Q, *a)
+        cells.append(T.size)
+        return T
+
+    def counted_dots(Q, B):
+        cells.append(len(Q) * len(B))
+        return grid_dots(Q, B)
+
+    monkeypatch.setattr(sim, "_np_pq_qtab", counted_qtab)
+    monkeypatch.setattr(sim, "_np_grid_dots", counted_dots)
+    got = sim._ivfpq_cell_topk(pdf, CW, m, sub, k)
+    assert cells and max(cells) <= budget
+    pd.testing.assert_frame_equal(
+        got.sort_values(["query_id", "neighbor_id"]).reset_index(drop=True),
+        want.sort_values(["query_id", "neighbor_id"]).reset_index(drop=True),
+        check_exact=True,
+    )
+
+
 def test_pq_folds_equal_the_sequential_reference():
     rng = np.random.default_rng(11)
     m, sub = 3, 2
