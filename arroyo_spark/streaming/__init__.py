@@ -27,7 +27,7 @@ from arroyo_spark.streaming.produce import (  # noqa: F401
     produce_chain,
     to_kafka_records,
 )
-from arroyo_spark.streaming.metrics import METRIC_MAP, progress_metrics  # noqa: F401
+from arroyo_spark.streaming.metrics import METRIC_MAP  # noqa: F401
 from arroyo_spark.streaming.codecs import (  # noqa: F401
     BINARY_JSON,
     JSON,
@@ -35,6 +35,4 @@ from arroyo_spark.streaming.codecs import (  # noqa: F401
     ColumnCodec,
     JsonCodec,
 )
-from arroyo_spark.streaming.healthcheck import HealthcheckListener  # noqa: F401
-from arroyo_spark.streaming.stuck import StuckDetector  # noqa: F401
 from arroyo_spark.streaming.profiler import QueryProfiler, stage_metrics  # noqa: F401

@@ -14,9 +14,9 @@ signal lives in this engine. Three classes:
   multiprocessing pool shared-memory block management) — there is no
   equivalent signal because the mechanism doesn't exist here.
 
-``progress_metrics(query)`` extracts the ENGINE-class signals from a live
-StreamingQuery's lastProgress so operators get one dict with the
-reference's names regardless of class.
+The ENGINE-class signals of a running query are written per epoch by the
+one streaming listener, ``profiler.QueryProfiler``, to
+``<dump_dir>/<query>.jsonl``; ``jobs.py stream`` writes them by default.
 """
 
 from __future__ import annotations
@@ -47,7 +47,8 @@ METRIC_MAP: dict[str, tuple[str, str]] = {
     "arroyo.consumer.resume": (ENGINE, "see pause"),
     "arroyo.consumer.stuck": (
         EMITTED,
-        "stuck.StuckDetector: listener-event gap > timeout -> stack dump + counter",
+        "profiler.QueryProfiler(stuck_timeout_s=): listener-event gap > timeout -> "
+        "stack dump to <dump_dir>/<query>.stuck + n_stuck_detected",
     ),
     "arroyo.consumer.partitions_assigned.count": (
         ENGINE,
@@ -65,7 +66,10 @@ METRIC_MAP: dict[str, tuple[str, str]] = {
     "arroyo.consumer.dlq_buffer.exceeded": (NA, "originals re-read from the source, not buffered"),
     "arroyo.consumer.dlq_buffer.len": (NA, "see dlq_buffer.exceeded"),
     # -- healthcheck ---------------------------------------------------------
-    "arroyo.processing.strategies.healthcheck.touch": (EMITTED, "healthcheck.touch() file mtime"),
+    "arroyo.processing.strategies.healthcheck.touch": (
+        EMITTED,
+        "profiler.QueryProfiler(healthcheck_file=) mtime, touched per listener event (1/s)",
+    ),
     # -- producer (Produce step) ---------------------------------------------
     "arroyo.producer.produce_status": (EMITTED, "epoch data write success precedes ledger commit"),
     "arroyo.producer.callback_latency": (ENGINE, "sink write task metrics"),
@@ -114,22 +118,3 @@ METRIC_MAP: dict[str, tuple[str, str]] = {
         "spark.python.worker count = executor cores",
     ),
 }
-
-
-def progress_metrics(query) -> dict[str, float]:
-    """ENGINE-class signals with reference names, from a live
-    StreamingQuery's lastProgress (None-safe: {} before first progress)."""
-    p = query.lastProgress
-    if p is None:
-        return {}
-    if hasattr(p, "asDict"):  # pyspark >= 4 returns an object
-        p = p.asDict() if callable(getattr(p, "asDict", None)) else p
-    dur = p.get("durationMs", {}) or {}
-    out: dict[str, float] = {}
-    if "triggerExecution" in dur and "addBatch" in dur:
-        out["arroyo.consumer.poll.time"] = float(dur["triggerExecution"] - dur.get("addBatch", 0))
-    if "addBatch" in dur:
-        out["arroyo.consumer.callback.time"] = float(dur["addBatch"])
-    if p.get("numInputRows") is not None:
-        out["arroyo.consumer.run.count"] = float(p["numInputRows"])
-    return out

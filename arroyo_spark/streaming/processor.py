@@ -20,6 +20,9 @@ offset range. On a real cluster the same processor runs over
 
 from __future__ import annotations
 
+import contextlib
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -28,6 +31,30 @@ from pyspark.sql import types as T
 
 from arroyo_spark.streaming.commit import CommitPolicy
 from arroyo_spark.streaming.sink import ExactlyOnceSink
+
+# a checkpoint manager's temp file: ".<final name>.<uuid>.tmp"
+_CHECKPOINT_TMP = re.compile(r"\.(.+)\.[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}\.tmp")
+
+
+def _sweep_refused_renames(checkpoint_dir: str) -> None:
+    """Delete checkpoint temp files whose final file exists, with their
+    Hadoop ``.crc``.
+
+    A replayed epoch rewrites its state deltas with
+    ``createAtomic(overwriteIfPossible=True)``; the local ``file`` scheme
+    refuses the rename onto the existing file, Spark keeps that file and
+    never deletes the temp. Sweeping at start bounds the leftovers to the
+    latest replay. A temp whose final file is missing is left alone. Paths
+    that are not local directories are not walked.
+    """
+    for root, _, files in os.walk(checkpoint_dir):
+        names = set(files)
+        for f in files:
+            m = _CHECKPOINT_TMP.fullmatch(f)
+            if m and m.group(1) in names:
+                for leftover in (f, f".{f}.crc"):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(root, leftover))
 
 
 @dataclass
@@ -68,14 +95,7 @@ class StreamProcessor:
     output_mode: str = "append"
     query_name: str = "arroyo_spark"
     commit_policy: CommitPolicy | None = None
-    # stuck watchdog (reference: StreamProcessor(stuck_detector_timeout=...)
-    # at arroyo/processing/processor.py:145,370): a wedged micro-batch emits
-    # no listener events — after stuck_timeout_s of silence, thread stacks
-    # are dumped to stuck_file and arroyo.consumer.stuck increments
-    stuck_timeout_s: float | None = None
-    stuck_file: str | None = None
     _query: object = field(default=None, repr=False)
-    _stuck_detector: object = field(default=None, repr=False)
 
     def _resolve_trigger(self) -> dict:
         if self.trigger is not None:
@@ -111,34 +131,9 @@ class StreamProcessor:
             # own clock inside the sink.
             trigger = {"availableNow": True}
         writer = writer.trigger(**trigger)
-        # a second start() without stop() must not orphan a previous
-        # detector's thread/listener on the shared session (ADVICE r3)
-        self._teardown_stuck_detector()
-        if self.stuck_timeout_s is not None:
-            from arroyo_spark.streaming.stuck import StuckDetector
-
-            if self.stuck_file is None:
-                raise ValueError("stuck_timeout_s requires stuck_file")
-            self._stuck_detector = StuckDetector(self.stuck_timeout_s, self.stuck_file)
-            self.spark.streams.addListener(self._stuck_detector)
-            self._stuck_detector.start()
-        try:
-            self._query = writer.start()
-        except Exception:
-            # bad options / checkpoint conflict: don't leave the detector
-            # thread + listener attached to the shared SparkSession
-            self._teardown_stuck_detector()
-            raise
+        _sweep_refused_renames(self.checkpoint_dir)
+        self._query = writer.start()
         return self._query
-
-    def _teardown_stuck_detector(self) -> None:
-        if self._stuck_detector is not None:
-            self._stuck_detector.stop()
-            try:
-                self.spark.streams.removeListener(self._stuck_detector)
-            except Exception:  # noqa: BLE001 — listener already gone
-                pass
-            self._stuck_detector = None
 
     def run_until_complete(self, timeout: float | None = None) -> None:
         """Process everything currently available, then stop (join()).
@@ -153,9 +148,7 @@ class StreamProcessor:
         finally:
             if q.isActive:
                 q.stop()
-            self._teardown_stuck_detector()
 
     def stop(self) -> None:
         if self._query is not None and self._query.isActive:
             self._query.stop()
-        self._teardown_stuck_detector()

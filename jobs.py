@@ -103,30 +103,45 @@ def cmd_synth(args) -> None:
 
 def cmd_stream(args) -> None:
     from arroyo_spark.session import get_spark
-    from arroyo_spark.streaming import ExactlyOnceSink, FileStreamSource, OffsetsLedger, StreamProcessor
-    from arroyo_spark.streaming.healthcheck import HealthcheckListener
+    from arroyo_spark.streaming import (
+        ExactlyOnceSink,
+        FileStreamSource,
+        OffsetsLedger,
+        QueryProfiler,
+        StreamProcessor,
+    )
     from arroyo_spark.types import STREAM_SCHEMA
 
     spark = get_spark("arroyo_spark_flagship", cores=args.cores)
-    if args.healthcheck:
-        spark.streams.addListener(HealthcheckListener(args.healthcheck))
-    ledger = OffsetsLedger(args.out, args.job_id)
-    sink = ExactlyOnceSink(output_dir=f"{args.out}/{args.job_id}", ledger=ledger)
-    proc = StreamProcessor(
+    # one record per epoch in <out>/<job_id>/profile/<query>.jsonl, plus the
+    # healthcheck touch and the stuck watchdog (reference:
+    # StreamProcessor(stuck_detector_timeout)) when asked for
+    prof = QueryProfiler(
+        f"{args.out}/{args.job_id}/profile",
         spark=spark,
-        source=FileStreamSource(args.source, STREAM_SCHEMA, args.max_files_per_trigger),
-        sink=sink,
-        checkpoint_dir=f"{args.out}/{args.job_id}/checkpoint",
-        pipeline=lambda df: flagship_stream_pipeline(df, args.watermark),
-        output_mode="append",
-        # ops watchdog (reference: StreamProcessor(stuck_detector_timeout)):
-        # a wedged micro-batch dumps stacks + flips the stuck marker
+        healthcheck_file=args.healthcheck,
         stuck_timeout_s=args.stuck_timeout,
-        stuck_file=f"{args.out}/{args.job_id}/stuck.dump" if args.stuck_timeout else None,
     )
-    proc.run_until_complete()
-    n = sink.read_output(spark).count()
-    print(f"stream: {len(ledger.epochs())} epochs committed, {n} window rows in {args.out}/{args.job_id}")
+    spark.streams.addListener(prof)
+    try:
+        ledger = OffsetsLedger(args.out, args.job_id)
+        sink = ExactlyOnceSink(output_dir=f"{args.out}/{args.job_id}", ledger=ledger)
+        proc = StreamProcessor(
+            spark=spark,
+            source=FileStreamSource(args.source, STREAM_SCHEMA, args.max_files_per_trigger),
+            sink=sink,
+            checkpoint_dir=f"{args.out}/{args.job_id}/checkpoint",
+            pipeline=lambda df: flagship_stream_pipeline(df, args.watermark),
+            output_mode="append",
+        )
+        proc.run_until_complete()
+        n = sink.read_output(spark).count()
+        print(f"stream: {len(ledger.epochs())} epochs committed, {n} window rows in {args.out}/{args.job_id}")
+    finally:
+        # stopping the session drains the listener bus, so the profile gets
+        # every progress event and the closing line before the job exits
+        spark.stop()
+        prof.close()
 
 
 def cmd_batch(args) -> None:
@@ -160,7 +175,8 @@ def main() -> None:
     st.add_argument("--max-files-per-trigger", type=int, default=4)
     st.add_argument("--healthcheck", default=None)
     st.add_argument("--stuck-timeout", type=float, default=None,
-                    help="seconds of listener-event silence before dumping stacks")
+                    help="seconds of listener-event silence before dumping stacks "
+                         "to <out>/<job-id>/profile/<query>.stuck")
     st.add_argument("--cores", type=int, default=os.cpu_count() or 8)
     st.set_defaults(fn=cmd_stream)
 

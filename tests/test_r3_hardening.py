@@ -154,37 +154,81 @@ def test_run_task_safe_bisects_multi_poison_batch(spark):
 class _Ev:
     def __init__(self, qid):
         self.id = qid
+        self.runId = f"{qid}-run"
+        self.name = qid
+        self.exception = None
 
 
 def test_stuck_detector_unit_fake_clock(tmp_path):
     """Staleness logic with an injected clock: a query that stops emitting
     events past the timeout is flagged once (stacks dumped), and a later
-    event clears the flag (recovery)."""
-    from arroyo_spark.streaming import StuckDetector
+    event clears the flag (recovery). The watchdog thread may call check()
+    too, so the asserts read the state, not check()'s return value."""
+    from arroyo_spark.streaming import QueryProfiler
 
     t = {"now": 0.0}
-    det = StuckDetector(timeout_s=5.0, stuck_file=str(tmp_path / "stuck.txt"), clock=lambda: t["now"])
+    prof = QueryProfiler(str(tmp_path), stuck_timeout_s=5.0, clock=lambda: t["now"])
+    try:
+        prof.onQueryStarted(_Ev("q1"))
+        t["now"] = 4.0
+        prof.check()
+        assert not prof.is_stuck() and prof.n_stuck_detected == 0
 
-    det.onQueryStarted(_Ev("q1"))
-    t["now"] = 4.0
-    assert det.check() == [] and not det.is_stuck()
+        t["now"] = 6.0  # gap 6s > 5s
+        prof.check()
+        assert prof.is_stuck() and prof.n_stuck_detected == 1
+        assert prof.check() == []  # dumped once, still stuck
+        assert prof.is_stuck() and prof.n_stuck_detected == 1
+        dump = (tmp_path / "q1.stuck").read_text()
+        assert dump.count("=== stuck query q1") == 1 and "Thread" in dump
 
-    t["now"] = 6.0  # gap 6s > 5s
-    assert det.check() == ["q1"] and det.is_stuck()
-    assert det.check() == []  # dumped once, still stuck
-    assert det.n_stuck_detected == 1
-    dump = (tmp_path / "stuck.txt").read_text()
-    assert "stuck query q1" in dump and "Thread" in dump
+        prof.onQueryIdle(_Ev("q1"))  # activity -> recovered
+        assert not prof.is_stuck()
+        t["now"] = 20.0
+        prof.check()  # goes stale again -> re-flagged
+        assert prof.is_stuck() and prof.n_stuck_detected == 2
 
-    det.onQueryIdle(_Ev("q1"))  # activity -> recovered
-    assert not det.is_stuck()
-    t["now"] = 20.0
-    assert det.check() == ["q1"]  # goes stale again -> re-flagged
-    assert det.n_stuck_detected == 2
+        prof.onQueryTerminated(_Ev("q1"))
+        assert not prof.is_stuck()
+        t["now"] = 100.0
+        assert prof.check() == [] and not prof.is_stuck()
+        assert prof.n_stuck_detected == 2
+    finally:
+        prof.close()
+    assert not prof._thread.is_alive()  # close() stops the watchdog
 
-    det.onQueryTerminated(_Ev("q1"))
-    t["now"] = 100.0
-    assert det.check() == [] and not det.is_stuck()
+
+def test_stuck_flag_is_counted_once_under_concurrent_checks(tmp_path):
+    """Many threads checking one stale query at once flag it exactly once:
+    one count and one stack dump (check-then-flag is atomic)."""
+    import sys
+    import threading
+
+    from arroyo_spark.streaming import QueryProfiler
+
+    t = {"now": 0.0}
+    prof = QueryProfiler(str(tmp_path), stuck_timeout_s=5.0, clock=lambda: t["now"])
+    before = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for round_ in range(1, 21):
+            prof.onQueryIdle(_Ev("q1"))
+            t["now"] += 10.0
+            start = threading.Barrier(16)
+            checkers = [
+                threading.Thread(target=lambda: (start.wait(timeout=30), prof.check()))
+                for _ in range(16)
+            ]
+            for th in checkers:
+                th.start()
+            for th in checkers:
+                th.join(timeout=30)
+            assert not any(th.is_alive() for th in checkers)
+            assert prof.n_stuck_detected == round_
+    finally:
+        sys.setswitchinterval(before)
+        prof.close()
+    assert (tmp_path / "q1.stuck").read_text().count("=== stuck query q1") == 20
 
 
 def test_stuck_detector_fires_on_wedged_batch(spark, stream_dir, tmp_path):
@@ -193,8 +237,9 @@ def test_stuck_detector_fires_on_wedged_batch(spark, stream_dir, tmp_path):
     finishes normally (recovery) and commits exactly-once."""
     import time as _time
 
+    from arroyo_spark.streaming import QueryProfiler
+
     out = str(tmp_path / "wedge")
-    stuck_file = str(tmp_path / "stuck.dump")
     ledger = OffsetsLedger(out, "wedge")
     sink = ExactlyOnceSink(output_dir=f"{out}/wedge", ledger=ledger)
 
@@ -212,12 +257,19 @@ def test_stuck_detector_fires_on_wedged_batch(spark, stream_dir, tmp_path):
         sink=sink,
         checkpoint_dir=f"{out}/ckpt",
         pipeline=slow_pipeline,
-        stuck_timeout_s=2.0,
-        stuck_file=stuck_file,
+        query_name="wedged",
     )
-    proc.run_until_complete(timeout=180)
-    assert os.path.exists(stuck_file), "watchdog never fired during the wedged batch"
-    assert "stuck query" in open(stuck_file).read()
+    prof = QueryProfiler(str(tmp_path / "profile"), stuck_timeout_s=2.0)
+    spark.streams.addListener(prof)
+    try:
+        proc.run_until_complete(timeout=180)
+    finally:
+        spark.streams.removeListener(prof)
+        prof.close()
+    stuck_file = tmp_path / "profile" / "wedged.stuck"
+    assert stuck_file.exists(), "watchdog never fired during the wedged batch"
+    assert "stuck query" in stuck_file.read_text()
+    assert prof.n_stuck_detected >= 1
     assert len(ledger.epochs()) >= 1  # the batch still committed after recovery
 
 

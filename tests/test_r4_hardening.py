@@ -3,17 +3,15 @@ pinning, synthetic-counter replay idempotence.
 
 Reference parity targets:
 - profiler: /root/reference/arroyo/utils/profiler.py:16-58 (wrap, dump on
-  close) — here: per-epoch progress + per-stage task time dumped on query
-  termination.
+  close) — here: one JSON line per epoch as the query runs, and per-stage
+  task time in a closing line on query termination.
 - sink fast path: same exactly-once/commit contract as the two-pass path,
   with the stats folded into the write job via observe().
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -51,9 +49,10 @@ def small_stream_dir(spark, tmp_path_factory):
     return str(flat)
 
 
-def test_query_profiler_dumps_per_stage_task_time(spark, small_stream_dir, tmp_path):
-    """The profiler's 'dump on close': after the query terminates, the
-    profile JSON has per-epoch phase durations AND per-stage task time."""
+def test_query_profiler_dumps_per_stage_task_time(spark, small_stream_dir, tmp_path, read_profile):
+    """The profiler writes one JSON line per epoch with its phase durations
+    as the query runs, and a closing line with per-stage task time when the
+    query terminates."""
     dump_dir = str(tmp_path / "profiles")
     prof = QueryProfiler(dump_dir, spark=spark)
     spark.streams.addListener(prof)
@@ -68,22 +67,20 @@ def test_query_profiler_dumps_per_stage_task_time(spark, small_stream_dir, tmp_p
             query_name="profiled_q",
         )
         proc.run_until_complete()
-        path = os.path.join(dump_dir, "profiled_q.profile.json")
-        # listener events are delivered async — poll briefly
-        deadline = time.time() + 30
-        while not os.path.exists(path) and time.time() < deadline:
-            time.sleep(0.2)
-        assert os.path.exists(path), "profile dump not written on termination"
-        rec = json.loads(open(path).read())
-        assert rec["totals"]["n_epochs"] >= 1
-        assert rec["totals"]["input_rows"] > 0
-        assert all("triggerExecution" in e["duration_ms"] for e in rec["epochs"])
-        # per-stage task time from the JVM status store (headless UI)
-        assert rec["stages"], "no stage metrics captured"
-        assert any(s["executor_run_time_ms"] > 0 for s in rec["stages"])
-        assert any(s["num_complete_tasks"] > 0 for s in rec["stages"])
+        recs = read_profile(os.path.join(dump_dir, "profiled_q.jsonl"))
     finally:
         spark.streams.removeListener(prof)
+    assert recs and "exception" in recs[-1], "no closing line written on termination"
+    *epochs, closing = recs
+    assert len(epochs) >= 1
+    assert [e["batch_id"] for e in epochs] == sorted(e["batch_id"] for e in epochs)
+    assert sum(e["num_input_rows"] for e in epochs) > 0
+    assert all("triggerExecution" in e["duration_ms"] for e in epochs)
+    assert closing["exception"] is None
+    # per-stage task time from the JVM status store (headless UI)
+    assert closing["stages"], "no stage metrics captured"
+    assert any(s["executor_run_time_ms"] > 0 for s in closing["stages"])
+    assert any(s["num_complete_tasks"] > 0 for s in closing["stages"])
 
 
 def test_sink_fast_path_metrics_and_output(spark, tmp_path):

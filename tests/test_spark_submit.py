@@ -110,9 +110,16 @@ def test_spark_submit_py_files_ship_and_resume(spark, tmp_path):
     assert len(ledger_files) >= n_slices  # one epoch per slice (mft=1)
     assert "epochs committed" in out1
 
+    # ---- the run profiled itself: one line per epoch + a closing line ----
+    epochs_before = [json.load(open(f))["epoch_id"] for f in ledger_files]
+    profiles = glob.glob(f"{run}/ship/profile/*.jsonl")
+    assert profiles, "jobs.py stream wrote no profile"
+    recs = [json.loads(line) for p in profiles for line in open(p)]
+    assert set(epochs_before) <= {r["batch_id"] for r in recs if "batch_id" in r}
+    assert [r["exception"] for r in recs if "exception" in r] == [None]
+
     # ---- resume: same checkpoint + ledger => strict no-op ----------------
     data_before = sorted(glob.glob(f"{run}/ship/data/epoch=*/**/*.parquet", recursive=True))
-    epochs_before = [json.load(open(f))["epoch_id"] for f in ledger_files]
     _run(submit, zpath, jobs_py, "stream", "--source", str(src),
          "--out", str(run), "--job-id", "ship", "--cores", "4",
          "--max-files-per-trigger", "1")

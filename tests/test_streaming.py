@@ -304,6 +304,17 @@ def test_filecontext_checkpoint_restarts_under_the_filesystem_manager(
     assert got and len(set(got)) == len(got)
     assert sorted(got) == sorted(want)
 
+    # the replay's rename onto the existing 2.delta was refused, which
+    # leaves its temp files behind; the next start sweeps them
+    state = f"{out}/legacy/checkpoint/state"
+    assert glob.glob(f"{state}/**/.*.tmp", recursive=True)
+    again, sink, ledger = _start_windows(spark, stream_dir, out, "legacy")
+    again.awaitTermination()
+    assert glob.glob(f"{state}/**/.*.tmp", recursive=True) == []
+    assert glob.glob(f"{state}/**/..*.tmp.crc", recursive=True) == []
+    assert ledger.epochs() == fresh_ledger.epochs()
+    assert sorted(_window_rows(spark, sink)) == sorted(want)
+
 
 def test_offsets_advance_through_fully_filtered_stream(spark, stream_dir, batch_df, tmp_path):
     """FilterStep sentinel semantics (filter.py:29-46): even when every row

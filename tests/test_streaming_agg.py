@@ -8,7 +8,13 @@ from datetime import datetime, timedelta
 from pyspark.sql import functions as F
 
 from arroyo_spark.plans import pipeline
-from arroyo_spark.streaming import ExactlyOnceSink, FileStreamSource, OffsetsLedger, StreamProcessor
+from arroyo_spark.streaming import (
+    ExactlyOnceSink,
+    FileStreamSource,
+    OffsetsLedger,
+    QueryProfiler,
+    StreamProcessor,
+)
 
 T0 = datetime(2024, 1, 1)
 SCHEMA = "conv_id string, turn_idx int, ts timestamp"
@@ -37,7 +43,7 @@ def windowed(df, duration="1 hour", watermark="10 minutes"):
     )
 
 
-def test_streaming_windowed_agg_append_exactly_once(spark, tmp_path):
+def test_streaming_windowed_agg_append_exactly_once(spark, tmp_path, read_profile):
     """Windows are emitted exactly once; a late row arriving AFTER its
     window was evicted is dropped and the window is never re-emitted.
 
@@ -67,8 +73,30 @@ def test_streaming_windowed_agg_append_exactly_once(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "agg1/ckpt"),
         pipeline=windowed,
         output_mode="append",
+        query_name="agg1",
     )
-    proc.run_until_complete()
+    prof = QueryProfiler(str(tmp_path / "profile"))
+    spark.streams.addListener(prof)
+    try:
+        proc.run_until_complete()
+        recs = read_profile(str(tmp_path / "profile" / "agg1.jsonl"))
+    finally:
+        spark.streams.removeListener(prof)
+
+    # the silent valve is visible: the per-epoch records carry every
+    # watermark drop the engine counted
+    dropped = [
+        so["rows_dropped_by_watermark"]
+        for r in recs
+        if "batch_id" in r
+        for so in r["state_operators"]
+    ]
+    want = sum(
+        so["numRowsDroppedByWatermark"]
+        for p in proc._query.recentProgress
+        for so in p["stateOperators"]
+    )
+    assert sum(dropped) == want > 0
 
     rows = sink.read_output(spark).collect()
     got = {(r.ws, r.conv_id): (r.n, r.s) for r in rows}
@@ -184,10 +212,8 @@ def test_pipeline_composition(spark):
 def test_healthcheck_listener(spark, tmp_path):
     import os
 
-    from arroyo_spark.streaming.healthcheck import HealthcheckListener
-
     hc = str(tmp_path / "health")
-    listener = HealthcheckListener(hc, debounce_s=0.0)
+    listener = QueryProfiler(str(tmp_path / "profile"), healthcheck_file=hc)
     spark.streams.addListener(listener)
     try:
         df = spark.createDataFrame([("a", 1, T0)], SCHEMA)
@@ -200,6 +226,29 @@ def test_healthcheck_listener(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-        assert os.path.exists(hc)  # touched on progress
+        assert os.path.exists(hc)  # touched on the query's events
     finally:
         spark.streams.removeListener(listener)
+
+
+class _Ev:
+    def __init__(self, qid):
+        self.id = qid
+        self.name = qid
+
+
+def test_healthcheck_touch_is_debounced(tmp_path):
+    """Events 0.5 s apart touch the healthcheck file once; an event 1.5 s
+    after the first touches it again (the reference's 1/s debounce)."""
+    t = {"now": 0.0}
+    hc = tmp_path / "health"
+    prof = QueryProfiler(str(tmp_path / "profile"), healthcheck_file=str(hc), clock=lambda: t["now"])
+    prof.onQueryStarted(_Ev("q1"))
+    assert hc.exists()
+    hc.unlink()
+    t["now"] = 0.5
+    prof.onQueryIdle(_Ev("q1"))
+    assert not hc.exists()
+    t["now"] = 1.5
+    prof.onQueryIdle(_Ev("q1"))
+    assert hc.exists()
