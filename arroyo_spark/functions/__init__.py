@@ -1,7 +1,6 @@
 from arroyo_spark.functions.text import (  # noqa: F401
     boilerplate_line_count,
     char_ngram_entropy,
-    char_ngram_entropy_arrow,
     fingerprint64,
     lang_id,
     normalize_text,

@@ -1,4 +1,5 @@
-"""Text-analysis column functions — all JVM-side (whole-stage codegen).
+"""Text-analysis column functions — all JVM-side (whole-stage codegen)
+but ``char_ngram_entropy``, an Arrow-batched pandas UDF.
 
 These are the engine's replacement for the reference's opaque per-message
 ``function`` parameters (RunTask et al., the entire compute surface of
@@ -185,60 +186,13 @@ def char_ngram_entropy(col: Column | str, n: int = 2) -> Column:
     so the float association is reproducible in DuckDB (list_reduce over
     list_sort — same order, same fold; count-1 grams contribute an exact
     +0.0 in both). Rounded to 9 decimals to absorb the <=1-ulp ln()
-    difference between the JVM and libm.
+    difference between the JVM and libm. Texts shorter than ``n`` (and
+    NULL) give 0.0.
 
-    Cost: O(m log m) per row — ONE run-length fold over the sorted gram
-    array (state = (prev, run, acc)), not the O(distinct * m) count-
-    per-distinct-gram shape (~4x faster measured). Runs in a sorted array
-    appear in lexicographic order, so the term order — and the bits —
-    match the oracle's sorted-distinct fold exactly. Still interpreted
-    (HOF lambdas never enter whole-stage codegen): ~2 ms/row on 400-char
-    docs — use ``char_ngram_entropy_arrow`` in hot paths.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    length = F.length(c)
-    grams = F.transform(
-        F.sequence(F.lit(1), length - (n - 1)), lambda i: c.substr(i, F.lit(n))
-    )
-    # Spark sequence(1, 0) yields DESCENDING [1, 0] — guard short strings
-    grams = F.when(length >= n, grams).otherwise(F.expr("array()"))
-    srt = F.array_sort(grams)
-    zero = F.lit(0.0)
-    init = F.struct(
-        F.lit("").alias("prev"), zero.alias("run"), zero.alias("acc")
-    )
-    state = F.aggregate(
-        srt,
-        init,
-        lambda st, x: F.struct(
-            x.alias("prev"),
-            F.when(x == st.prev, st.run + 1.0).otherwise(F.lit(1.0)).alias("run"),
-            F.when(x == st.prev, st.acc)
-            .otherwise(st.acc + F.when(st.run > 0, st.run * F.log(st.run)).otherwise(zero))
-            .alias("acc"),
-        ),
-        # close the final run ("" never collides: grams are n>=1 chars)
-        lambda st: st.acc
-        + F.when(st.run > 0, st.run * F.log(st.run)).otherwise(zero),
-    )
-    total = F.size(grams).cast("double")
-    ent = F.when(total > 0, F.log(total) - state / total).otherwise(zero)
-    return F.round(ent, 9)
-
-
-def char_ngram_entropy_arrow(col: Column | str, n: int = 2) -> Column:
-    """Arrow-batched twin of ``char_ngram_entropy`` — same value, same
-    9-decimal round, ~10x faster.
-
-    Spark's higher-order functions are interpreted (no whole-stage codegen
-    inside aggregate/transform lambdas), so the pure-expression version
-    pays ~5 us per array element; an Arrow-batched Counter kernel beats it
-    6.5x end-to-end (measured warm on 5000 docs x ~400 chars: 10.4s
-    expression vs 1.6s Arrow, mostly fixed overhead). Same fold order
-    (lexicographically
-    sorted grams, left-to-right), same libm log as DuckDB — the oracle
-    hash-matches either implementation. Use this in hot paths; the
-    expression version when a query must stay UDF-free.
+    An Arrow-batched pandas UDF (one Counter per row): Spark's
+    higher-order functions are interpreted outside whole-stage codegen,
+    and the aggregate/transform form of this fold was 6.5x slower
+    end-to-end (warm, 5000 docs x ~400 chars: 10.4 s against 1.6 s).
     """
     # module-level pandas import would slow every `arroyo_spark.functions`
     # import; resolve the UDF type hints against an injected global instead

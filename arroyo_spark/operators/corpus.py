@@ -4,7 +4,9 @@ Not present in the reference (arroyo has no relational surface); these are
 the engine's training-data-pipeline additions alongside dedup/similarity.
 Both families are pure JVM column expressions + at most one shuffle, and
 both are bit-reproducible across engines so the DuckDB oracle gate holds
-hash-exact.
+hash-exact. The per-document lexical passes (``ngram_repetition``,
+``term_freqs``) are Python row functions on the one per-row Arrow driver
+``map._row_kernel``, with the tokenizer/hash twins from ``dedup``.
 
 Scale notes (10^9+ docs):
 - hash sampling: zero shuffles — a map-side filter on a 60-bit md5-derived
@@ -25,7 +27,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from arroyo_spark.functions.text import normalize_text, word_tokens
-from arroyo_spark.operators.dedup import md5_hash64
+from arroyo_spark.operators.dedup import (
+    _distinct_shingle_hashes,
+    _distinct_shingle_rows,
+    _py_md5_h64,
+    _py_word_tokens,
+    md5_hash64,
+)
+from arroyo_spark.operators.map import _row_kernel, _spread
 
 
 def hash_bucket(col: Column | str, n_buckets: int = 10_000, salt: str = "") -> Column:
@@ -89,40 +98,23 @@ def ngram_repetition(
     signal for machine-generated or boilerplate-heavy text: ratio =
     1 - distinct_ngrams / total_ngrams over the doc's own word n-grams.
 
-    r6 (guide §4.2): runs per document in an Arrow-batched kernel — the
-    interpreted tokenize/shingle/array_distinct HOF chain leaves the JVM.
-    Arithmetic parity: n_ngrams and the distinct count are exact ints and
-    ``1.0 - (distinct / total)`` is the same two IEEE ops as the old
-    ``lit(1.0) - size(array_distinct(a)) / size(a)``. Docs with fewer
-    than ``n`` tokens have no n-grams and are excluded, matching the
-    shingle family's contract. Returns (id, n_ngrams, repeat_ratio)."""
-    import pandas as pd
+    Runs per document as a row function. Arithmetic parity with the SQL
+    form: n_ngrams and the distinct count are exact ints and
+    ``1.0 - (distinct / total)`` is the same two IEEE ops as
+    ``1.0 - size(array_distinct(a)) / size(a)``. Docs with fewer than
+    ``n`` tokens have no n-grams and are excluded, matching the shingle
+    family's contract. Returns (id, n_ngrams, repeat_ratio)."""
 
-    from arroyo_spark.operators.dedup import _py_word_tokens
+    def row(text):
+        toks = _py_word_tokens(text)
+        total = len(toks) - n + 1
+        if total < 1:
+            return None
+        grams = {" ".join(toks[i : i + n]) for i in range(total)}
+        return total, 1.0 - (len(grams) / total)
 
-    idt = dict(df.dtypes)[id_col]
-
-    def stats(batches):
-        for pdf in batches:
-            ids_out, n_out, r_out = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _py_word_tokens(text)
-                total = len(toks) - n + 1
-                if total < 1:
-                    continue
-                grams = [" ".join(toks[i : i + n]) for i in range(total)]
-                ids_out.append(did)
-                n_out.append(total)
-                r_out.append(1.0 - (len(set(grams)) / total))
-            if ids_out:
-                yield pd.DataFrame(
-                    {id_col: ids_out, "n_ngrams": n_out, "repeat_ratio": r_out}
-                )
-
-    from arroyo_spark.operators.similarity import _spread
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        stats, f"{id_col} {idt}, n_ngrams long, repeat_ratio double"
+    return _row_kernel(
+        _spread(df), (id_col, text_col), row, "n_ngrams long, repeat_ratio double"
     )
 
 
@@ -196,18 +188,15 @@ def ngram_decontaminate(
     shingle count rides the SAME shuffle as the hit count (one broadcast
     left join + one groupBy), so the scale shape is unchanged.
     """
-    # r6 (guide §4.2): per-doc distinct shingles from the Arrow-batched
-    # kernel — the train side's corpus-wide distinct() exchange collapses
-    # into the map side (same row set; the bench side still needs its
-    # tiny cross-doc distinct before broadcasting)
-    from arroyo_spark.operators.dedup import _distinct_shingle_rows
-
+    # per-doc distinct shingles: the train side needs no corpus-wide
+    # distinct() exchange; the bench side still needs its tiny cross-doc
+    # distinct before broadcasting
     bench_sh = (
-        _distinct_shingle_rows(bench, id_col, text_col, shingle_n)
+        _distinct_shingle_rows(_spread(bench), id_col, text_col, shingle_n)
         .select("shingle")
         .distinct()
     )
-    train_sh = _distinct_shingle_rows(train, id_col, text_col, shingle_n)
+    train_sh = _distinct_shingle_rows(_spread(train), id_col, text_col, shingle_n)
     if frac_threshold is not None:
         hits = (
             train_sh.join(
@@ -278,24 +267,19 @@ def duplicate_span_stats(
     Returns (id, n_spans, n_dup_spans, dup_frac) with n_spans counting
     DISTINCT spans (multiplicity within a doc is ngram_repetition's job).
     """
-    # r6 (guide §4.2): per-doc distinct span hashes come from an
-    # Arrow-batched kernel — the explode + per-occurrence md5 + the
-    # corpus-wide distinct() exchange all collapse into the map side
-    # (distinctness within a doc needs no shuffle; the row SET is
-    # identical, see _distinct_shingle_hashes)
-    from arroyo_spark.operators.dedup import _distinct_shingle_hashes
-
+    # per-doc distinct span hashes: distinctness within a doc needs no
+    # shuffle, so no corpus-wide distinct() exchange
     sh = _distinct_shingle_hashes(df, id_col, text_col, span_n)
     # staged once: the frequency agg and the stats join both consume it;
     # unstaged, Catalyst would run the kernel twice
     sh = sh.localCheckpoint(eager=False)
-    # r6 (guide §3.2 spirit): join back only the DUPLICATED spans — the
-    # head of the frequency distribution — instead of the full per-span
-    # frequency table. The flagged set is orders of magnitude smaller
-    # than the span universe (unique prose dominates any real corpus),
-    # so AQE turns the join's build side into a broadcast and the probe
-    # side never reshuffles; a left join + count of hits computes the
-    # same n_dup_spans (span has >= min_docs docs ⟺ it is flagged).
+    # join back only the DUPLICATED spans — the head of the frequency
+    # distribution — instead of the full per-span frequency table. The
+    # flagged set is orders of magnitude smaller than the span universe
+    # (unique prose dominates any real corpus), so AQE turns the join's
+    # build side into a broadcast and the probe side never reshuffles; a
+    # left join + count of hits computes the same n_dup_spans (span has
+    # >= min_docs docs ⟺ it is flagged).
     flagged = (
         sh.groupBy("_sh")
         .agg(F.count(F.lit(1)).alias("_docs"))
@@ -744,45 +728,19 @@ def term_freqs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     operator; compute it ONCE (and localCheckpoint it) when composing
     feature hashing with BM25 in one plan.
 
-    r6 (guide §4.2): runs per document in an Arrow-batched kernel — the
-    token explode, per-occurrence md5 and the (id, fp) count exchange all
-    collapse into the map side (term frequency is a PER-DOC aggregate, so
-    no shuffle is fundamentally required). Python tokenizer/hash are the
-    exact twins of ``word_tokens``/``md5_hash64`` (see
-    ``dedup._py_word_tokens``); counts are exact ints — identical rows."""
-    import pandas as pd
+    Runs per document as a row function: term frequency is a PER-DOC
+    aggregate, so no token rows and no (id, fp) count exchange exist.
+    The Python tokenizer/hash are the exact twins of
+    ``word_tokens``/``md5_hash64`` (see ``dedup._py_word_tokens``); counts
+    are exact ints — identical rows."""
+    from collections import Counter
 
-    from arroyo_spark.operators.dedup import _py_md5_h64, _py_word_tokens
+    def row(text):
+        counts = Counter(_py_md5_h64(t) for t in _py_word_tokens(text))
+        return list(counts), list(counts.values())
 
-    idt = dict(df.dtypes)[id_col]
-
-    def freqs(batches):
-        import numpy as np
-        from collections import Counter
-
-        for pdf in batches:
-            ids_out, fp_out, tf_out = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _py_word_tokens(text)
-                if not toks:
-                    continue
-                counts = Counter(_py_md5_h64(t) for t in toks)
-                ids_out.append(np.full(len(counts), did))
-                fp_out.append(np.fromiter(counts.keys(), dtype=np.int64, count=len(counts)))
-                tf_out.append(np.fromiter(counts.values(), dtype=np.int64, count=len(counts)))
-            if ids_out:
-                yield pd.DataFrame(
-                    {
-                        "id": np.concatenate(ids_out),
-                        "fp": np.concatenate(fp_out),
-                        "tf": np.concatenate(tf_out),
-                    }
-                )
-
-    from arroyo_spark.operators.similarity import _spread
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        freqs, f"id {idt}, fp long, tf long"
+    return _row_kernel(
+        _spread(df), (F.col(id_col).alias("id"), text_col), row, "fp long, tf long"
     )
 
 

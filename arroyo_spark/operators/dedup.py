@@ -2,8 +2,9 @@
 
 Not present in the reference (arroyo has no relational/dedup surface);
 these are the engine's first-class additions for the 100 TB corpus case.
-Every operator is pure column expressions + shuffles that Catalyst can
-plan — no driver-side loops, no Python in the hot path.
+Every operator is column expressions + shuffles that Catalyst can plan,
+plus per-document Python row functions (tokenize, shingle, hash, fold) run
+by the one per-row Arrow driver ``map._row_kernel``; no driver-side loops.
 
 Determinism & oracle-checkability: the hash primitive is
 ``md5 -> first 15 hex chars -> int64`` which evaluates bit-identically in
@@ -12,9 +13,9 @@ ANSI-SQL oracle exactly. In production you would swap md5 for xxhash64
 (cheaper); the algebra is unchanged.
 
 Scale notes (10^9+ docs):
-- minhash: explode(shingles) x n_perm is the dominant cost; it is
-  map-side only (no shuffle) until the per-(doc, perm) min aggregation,
-  which partial-aggregates before the shuffle.
+- minhash: shingles x n_perm is the dominant cost; it runs per document
+  in the row function, so no shingle rows exist JVM-side and the first
+  shuffle carries n_perm (id, perm, minhash) rows per doc.
 - LSH bands: candidate generation is a self-equi-join on (band, band_key)
   — hash-partitioned, no cross product; hot buckets (boilerplate docs)
   are bounded by ``max_bucket_size``.
@@ -30,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arroyo_spark.functions.text import normalize_text, word_tokens
+from arroyo_spark.operators.map import _row_kernel, _spread
 
 
 def md5_hash64(col: Column) -> Column:
@@ -38,8 +40,8 @@ def md5_hash64(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Python twins of the JVM text primitives, used by the Arrow-batched kernels
-# below (guide §4.2). Parity contracts:
+# Python twins of the JVM text primitives, used by the row functions below
+# and in ``corpus``. Parity contracts:
 # - _py_word_tokens == word_tokens: lower + split on [^a-z0-9]+ + drop
 #   empties. The character classes are pure-ASCII, where Java and Python
 #   regex/casing agree exactly; the oracle gate verifies end to end.
@@ -101,85 +103,37 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return shingles_of_tokens(word_tokens(col), n)
 
 
-def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, shingle) rows with tokens materialized once per document."""
-    return (
-        df.select(F.col(id_col), word_tokens(text_col).alias("_toks"))
-        .select(F.col(id_col), F.explode(shingles_of_tokens(F.col("_toks"), n)).alias("shingle"))
-    )
-
-
 def _distinct_shingle_rows(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """``_shingle_rows(...).distinct()`` computed per document in an
-    Arrow-batched kernel (guide §4.2): per-doc distinct needs no
-    corpus-wide exchange, and the tokenize+shingle pass leaves the JVM
-    HOF path. Same (id, shingle) row SET — the Python tokenizer is the
-    exact twin of ``word_tokens`` (see ``_py_word_tokens``)."""
-    import pandas as pd
+    """Distinct (id, shingle) rows per document: the n-word shingles of
+    ``word_tokens``, deduplicated within the doc. Per-doc distinctness
+    needs no corpus-wide exchange; the Python tokenizer is the exact twin
+    of ``word_tokens`` (see ``_py_word_tokens``). The input keeps its
+    partitioning: callers spread it where that pays."""
 
-    idt = dict(df.dtypes)[id_col]
+    def row(text):
+        toks = _py_word_tokens(text)
+        return (list({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}),)
 
-    def rows(batches):
-        for pdf in batches:
-            ids_out: list = []
-            sh_out: list = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _py_word_tokens(text)
-                if len(toks) < n:
-                    continue
-                seen = set()
-                for i in range(len(toks) - n + 1):
-                    seen.add(" ".join(toks[i : i + n]))
-                ids_out.extend([did] * len(seen))
-                sh_out.extend(seen)
-            if ids_out:
-                yield pd.DataFrame({id_col: ids_out, "shingle": sh_out})
-
-    from arroyo_spark.operators.similarity import _spread
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        rows, f"{id_col} {idt}, shingle string"
-    )
+    return _row_kernel(df, (id_col, text_col), row, "shingle string")
 
 
 def _distinct_shingle_hashes(
     df: DataFrame, id_col: str, text_col: str, n: int, out_col: str = "_sh"
 ) -> DataFrame:
-    """Per-doc DISTINCT 60-bit span hashes (id, out_col) — the kernel twin
-    of ``_shingle_rows >> md5_hash64 >> distinct``: hashing happens in the
-    kernel (memoized md5), distinctness per doc needs no exchange, and
-    only (id, int64) rows ever reach the JVM."""
-    import pandas as pd
+    """Per-doc DISTINCT 60-bit span hashes (id, out_col): the
+    ``md5_hash64`` of each ``_distinct_shingle_rows`` shingle, hashed in
+    the row function (memoized md5) so only (id, int64) rows reach the
+    JVM."""
 
-    idt = dict(df.dtypes)[id_col]
+    def row(text):
+        toks = _py_word_tokens(text)
+        return (
+            list({_py_md5_h64(" ".join(toks[i : i + n])) for i in range(len(toks) - n + 1)}),
+        )
 
-    def rows(batches):
-        import numpy as np
-
-        for pdf in batches:
-            ids_out, h_out = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _py_word_tokens(text)
-                if len(toks) < n:
-                    continue
-                seen = {
-                    _py_md5_h64(" ".join(toks[i : i + n]))
-                    for i in range(len(toks) - n + 1)
-                }
-                ids_out.append(np.full(len(seen), did))
-                h_out.append(np.fromiter(seen, dtype=np.int64, count=len(seen)))
-            if ids_out:
-                yield pd.DataFrame(
-                    {id_col: np.concatenate(ids_out), out_col: np.concatenate(h_out)}
-                )
-
-    from arroyo_spark.operators.similarity import _spread
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        rows, f"{id_col} {idt}, {out_col} long"
-    )
+    return _row_kernel(_spread(df), (id_col, text_col), row, f"{out_col} long")
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -217,53 +171,32 @@ def minhash_signatures(
             f"n_perm={n_perm} out of range [1, 112]: h1 + i*h2 overflows int64 "
             "past i=111 (h1 is 60-bit, h2 is 56-bit)"
         )
-    import pandas as pd
+    import numpy as np
 
-    idt = dict(df.dtypes)[id_col]
-
-    # r6 (guide §4.2): the whole signature pipeline — shingle explode,
-    # per-occurrence md5, the n_perm-way explode and the (id, perm) min
-    # aggregation — runs per document inside one Arrow-batched kernel:
-    # no shingle or permutation rows ever exist JVM-side, the exchange
-    # carries exactly the n_perm output rows per doc. Arithmetic parity:
-    # h1/h2 are the same md5-hex substrings (_py_md5_hex), the
+    # the whole signature pipeline — shingles, per-occurrence md5, the
+    # n_perm-way walk and the per-perm min — runs per document: no shingle
+    # or permutation rows ever exist JVM-side. Arithmetic parity: h1/h2
+    # are the same md5-hex substrings (_py_md5_hex), the
     # (h1 + i*h2) % 2^60 walk is exact int64 (bounded < 2^63 by the
     # n_perm guard), and min() over exact ints is order-independent.
-    def sigs(batches):
-        import numpy as np
+    perm_arr = np.arange(n_perm, dtype=np.int64)
+    perms = perm_arr.tolist()
 
-        perm_arr = np.arange(n_perm, dtype=np.int64)
-        for pdf in batches:
-            ids_out, perms_out, mins_out = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _py_word_tokens(text)
-                if len(toks) < shingle_n:
-                    continue
-                hexes = [
-                    _py_md5_hex(" ".join(toks[i : i + shingle_n]))
-                    for i in range(len(toks) - shingle_n + 1)
-                ]
-                h1 = np.array([int(h[:15], 16) for h in hexes], dtype=np.int64)
-                h2 = np.array([int(h[16:30], 16) for h in hexes], dtype=np.int64)
-                # (n_sh, n_perm) walk — int64 exact, no overflow by guard
-                hv = (h1[:, None] + perm_arr[None, :] * h2[:, None]) % (1 << 60)
-                ids_out.append(np.full(n_perm, did))
-                perms_out.append(perm_arr.astype(np.int32))
-                mins_out.append(hv.min(axis=0))
-            if ids_out:
-                yield pd.DataFrame(
-                    {
-                        id_col: np.concatenate(ids_out),
-                        "perm": np.concatenate(perms_out),
-                        "minhash": np.concatenate(mins_out),
-                    }
-                )
+    def row(text):
+        toks = _py_word_tokens(text)
+        if len(toks) < shingle_n:
+            return None
+        hexes = [
+            _py_md5_hex(" ".join(toks[i : i + shingle_n]))
+            for i in range(len(toks) - shingle_n + 1)
+        ]
+        h1 = np.array([int(h[:15], 16) for h in hexes], dtype=np.int64)
+        h2 = np.array([int(h[16:30], 16) for h in hexes], dtype=np.int64)
+        # (n_sh, n_perm) walk — int64 exact, no overflow by guard
+        hv = (h1[:, None] + perm_arr[None, :] * h2[:, None]) % (1 << 60)
+        return perms, hv.min(axis=0).tolist()
 
-    from arroyo_spark.operators.similarity import _spread
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        sigs, f"{id_col} {idt}, perm int, minhash long"
-    )
+    return _row_kernel(_spread(df), (id_col, text_col), row, "perm int, minhash long")
 
 
 def lsh_bands(sig_df: DataFrame, id_col: str, band_size: int = 4) -> DataFrame:
@@ -335,37 +268,21 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     algorithm. Bit j is 1 iff sum over tokens of (+1 if token-hash bit j
     else -1) is positive.
     """
-    import pandas as pd
+    import numpy as np
 
-    idt = dict(df.dtypes)[id_col]
+    # exact integer votes per document: one output row per doc
+    jj = np.arange(bits, dtype=np.int64)
 
-    # r6 (guide §4.2): the token x bits explode (previously N_tokens * bits
-    # JVM rows through two aggregations) runs per document in one
-    # Arrow-batched kernel — exact integer votes, so the result is
-    # bit-identical; the exchange carries one row per doc.
-    def sims(batches):
-        import numpy as np
+    def row(text):
+        toks = _py_word_tokens(text)
+        if not toks:
+            return None  # token-less docs have no fingerprint
+        h = np.array([_py_md5_h64(t) for t in toks], dtype=np.int64)
+        bitm = (h[:, None] >> jj[None, :]) & 1  # h >= 0: logical shift
+        votes = (2 * bitm - 1).sum(axis=0)
+        return (int(((votes > 0).astype(np.int64) << jj).sum()),)
 
-        jj = np.arange(bits, dtype=np.int64)
-        for pdf in batches:
-            ids_out, sh_out = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _py_word_tokens(text)
-                if not toks:
-                    continue  # explode drops token-less docs
-                h = np.array([_py_md5_h64(t) for t in toks], dtype=np.int64)
-                bitm = (h[:, None] >> jj[None, :]) & 1  # h >= 0: logical shift
-                votes = (2 * bitm - 1).sum(axis=0)
-                ids_out.append(did)
-                sh_out.append(int(((votes > 0).astype(np.int64) << jj).sum()))
-            if ids_out:
-                yield pd.DataFrame({id_col: ids_out, "simhash": sh_out})
-
-    from arroyo_spark.operators.similarity import _spread
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        sims, f"{id_col} {idt}, simhash long"
-    )
+    return _row_kernel(_spread(df), (id_col, text_col), row, "simhash long")
 
 
 def ngram_jaccard_pairs(
@@ -382,11 +299,14 @@ def ngram_jaccard_pairs(
     shingle buckets — at corpus scale run it on LSH candidates, not all
     pairs (compose: minhash_candidates >> join >> this).
     """
-    # r6 note: the per-doc distinct-shingle kernel (used by span stats /
-    # decontamination) measured ~0.3s SLOWER here — this operator's
-    # shingle volume is small enough that the JVM explode+distinct wins,
-    # so it keeps the original path.
-    sh = _shingle_rows(df, id_col, text_col, shingle_n).distinct()
+    # the input keeps its partitioning: the verifier runs on a bounded
+    # candidate set (1000 docs, one partition, in the registry query), where
+    # spreading it costs a shuffle stage (about 0.3 s at sf0.1 on 4 cores)
+    # that the shingle kernel never wins back. Staged once: the count agg
+    # and both join sides consume it; unstaged, Catalyst runs the kernel
+    # per consumer (7 MapInPandas in the plan, 1.09-1.23 s against
+    # 0.61-0.80 s staged, best of 5, sf0.1, 4 cores)
+    sh = _distinct_shingle_rows(df, id_col, text_col, shingle_n).localCheckpoint(eager=False)
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -457,12 +377,11 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    # r6 termination check (guide §1.2 — fewer driver actions per round):
-    # labels are monotonically NON-INCREASING per node, so the label sum
-    # strictly decreases until the fixed point and "sum unchanged" ⟺
-    # "no label changed". One aggregate over the (checkpointed) new
-    # labels replaces the old-vs-new join + count — a full join of the
-    # label table dropped from every round. decimal(38,0) keeps the sum
+    # termination check, one driver action per round: labels are
+    # monotonically NON-INCREASING per node, so the label sum strictly
+    # decreases until the fixed point and "sum unchanged" ⟺ "no label
+    # changed" — one aggregate over the (checkpointed) new labels, no
+    # old-vs-new join of the label table. decimal(38,0) keeps the sum
     # exact at any node count / id range (a raw long sum could wrap).
     numeric_ids = dict(labels.dtypes)["label"] in (
         "tinyint", "smallint", "int", "bigint"

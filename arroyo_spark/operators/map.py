@@ -16,6 +16,12 @@ collapses into Arrow-batched execution that Spark already performs:
   — a vectorized ``mapInPandas`` where Arrow plays the role of the
   reference's pickle-5 + SharedMemory blocks and
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` plays ``max_batch_size``.
+- Per-row Python functions (the lexical and media kernels of ``dedup``,
+  ``corpus`` and ``multimodal``): ``_row_kernel`` — one driver over
+  ``run_task_pandas`` that calls the function once per row, assembles the
+  batch's output frame and repeats the row's id per output row. The
+  partition layout stays the caller's: a stage spreads its input with
+  ``_spread`` where that pays, and keeps the scan layout where it does not.
 
 Backpressure (``MessageRejected``), carried-message retry, and block
 resizing have no analog here by design: Spark's pull-based scheduling and
@@ -24,7 +30,7 @@ Arrow streaming subsume them (SURVEY.md §4).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
@@ -60,6 +66,83 @@ def run_task_pandas(
             yield fn(pdf)
 
     return df.mapInPandas(_apply, schema=out_schema)
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin the frame across the cluster IFF it has fewer
+    partitions than cores (guide §2.5 input skew: a small parquet file
+    scans as 1-2 splits, and every Arrow kernel downstream would run on
+    1-2 cores while the rest idle). Conditional on the CURRENT partition
+    count, so at production scale — where scans have thousands of natural
+    splits — this is a no-op, never an extra corpus shuffle."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n)
+    return df
+
+
+# numpy dtype of each scalar DDL type a row function returns, so that a
+# batch with no output rows still carries the schema's types; any other
+# type (string, binary) is built as an object column
+_NP_DTYPES = {"int": "int32", "long": "int64", "double": "float64"}
+
+
+def _row_batch(
+    fn: Callable[..., Sequence | None], schema: str
+) -> Callable[["pd.DataFrame"], "pd.DataFrame"]:
+    """The per-batch body of ``_row_kernel``: a pandas frame whose first
+    column is the row id -> the output frame (id first, then ``schema``).
+
+    ``fn`` gets the row's other values and returns one value per output
+    column: scalars give one output row, equal-length lists give one row
+    per element, ``None`` (or empty lists) gives none. The id is repeated
+    for every output row of its input row."""
+    fields = [f.split() for f in schema.split(",")]  # [[name, type], ...]
+
+    def apply(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        import numpy as np
+        import pandas as pd
+
+        outs: list[list] = [[] for _ in fields]
+        counts = []
+        for vals in zip(*(pdf[c] for c in pdf.columns[1:])):
+            res = fn(*vals)
+            if res is None:
+                counts.append(0)
+            elif isinstance(res[0], list):
+                counts.append(len(res[0]))
+                for out, v in zip(outs, res):
+                    out.extend(v)
+            else:
+                counts.append(1)
+                for out, v in zip(outs, res):
+                    out.append(v)
+        id_name = pdf.columns[0]
+        frame = {id_name: pdf[id_name].to_numpy().repeat(counts)}
+        for (name, typ), out in zip(fields, outs):
+            frame[name] = np.asarray(out, dtype=_NP_DTYPES.get(typ, object))
+        return pd.DataFrame(frame)
+
+    return apply
+
+
+def _row_kernel(
+    df: DataFrame,
+    cols: Sequence[str | Column],
+    fn: Callable[..., Sequence | None],
+    schema: str,
+) -> DataFrame:
+    """Run ``fn`` once per row of ``df.select(*cols)`` in one Arrow-batched
+    ``mapInPandas`` (``run_task_pandas``).
+
+    ``cols[0]`` is the row id and keeps its name and type; ``fn`` receives
+    the values of the other columns and returns the ``schema`` columns
+    (DDL, without the id) as ``_row_batch`` describes. The input keeps its
+    partitioning; pass ``_spread(df)`` to run a small input on every core.
+    """
+    src = df.select(*cols)
+    id_name, id_type = src.dtypes[0]
+    return run_task_pandas(src, _row_batch(fn, schema), f"{id_name} {id_type}, {schema}")
 
 
 # column that carries a mid-pipeline InvalidMessage reason (null = valid).

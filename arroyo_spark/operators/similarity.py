@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from arroyo_spark.operators.map import _spread
+
 # Cells (query rows x base rows) of one scored chunk: ~32 MB of float64
 # per grid, plus its sort key, whatever the query set or bucket size.
 _GRID_CELLS = 4_000_000
@@ -78,19 +80,6 @@ def _prep(df: DataFrame, id_col: str, vec_col: str, dim: int | None = None) -> D
     """``_vectors`` spread across the cores: the input of the Arrow
     kernels. ``dim`` may be passed but is not needed by the projection."""
     return _spread(_vectors(df, id_col, vec_col))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the frame across the cluster IFF it has fewer
-    partitions than cores (guide §2.5 input skew: a small parquet file
-    scans as 1-2 splits, and every Arrow kernel downstream would run on
-    1-2 cores while the rest idle). Conditional on the CURRENT partition
-    count, so at production scale — where scans have thousands of natural
-    splits — this is a no-op, never an extra corpus shuffle."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
 
 
 def _ranked(cand: DataFrame, k: int, score: str = "cosine") -> DataFrame:

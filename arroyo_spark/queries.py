@@ -577,7 +577,7 @@ FROM feat
 """,
 )
 def q_text_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from arroyo_spark.operators.similarity import _spread
+    from arroyo_spark.operators.map import _spread
 
     # r6: the quality/lang-id projection is the dominant per-row cost and
     # previously ran at scan parallelism (a single small parquet file = 2
@@ -615,7 +615,7 @@ def q_text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate lines appended (concat_ws skips the NULL conditional line
     in BOTH engines), then the marker filter strips them JVM-side."""
     from arroyo_spark.functions.text import boilerplate_line_count, strip_boilerplate
-    from arroyo_spark.operators.similarity import _spread
+    from arroyo_spark.operators.map import _spread
 
     # r6: interpreted line-filter HOFs at 2-split scan parallelism -> spread
     d = _spread(load_table(spark, sf_dir, "documents"))
@@ -663,13 +663,13 @@ def q_text_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-bigram Shannon entropy (perplexity proxy, VERDICT r4 #8).
     Identical left-to-right fold over sorted distinct grams in both
     engines; 9-decimal round absorbs JVM-vs-libm ln() ulps."""
-    from arroyo_spark.functions.text import char_ngram_entropy_arrow
-    from arroyo_spark.operators.similarity import _spread
+    from arroyo_spark.functions.text import char_ngram_entropy
+    from arroyo_spark.operators.map import _spread
 
-    # r6: the Arrow entropy kernel ran on the scan's 2 splits -> spread
+    # the Arrow entropy kernel would run on the scan's 2 splits -> spread
     d = _spread(load_table(spark, sf_dir, "documents"))
     return d.select(
-        "doc_id", char_ngram_entropy_arrow("text", 2).alias("bigram_entropy")
+        "doc_id", char_ngram_entropy("text", 2).alias("bigram_entropy")
     )
 
 
@@ -696,7 +696,7 @@ def q_text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     redacted with the shared RE2-and-Java-safe patterns. Spark and DuckDB
     replace identical spans."""
     from arroyo_spark.functions.text import redact_pii
-    from arroyo_spark.operators.similarity import _spread
+    from arroyo_spark.operators.map import _spread
 
     # r6: three regexp_replace passes per row at 2-split scan parallelism
     d = _spread(load_table(spark, sf_dir, "documents"))
@@ -2489,7 +2489,7 @@ def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus's 10-99-word docs (min_words=40, stopword floor 1) so the
     decision genuinely splits the data."""
     from arroyo_spark.functions.text import gopher_quality_flags
-    from arroyo_spark.operators.similarity import _spread
+    from arroyo_spark.operators.map import _spread
 
     # r6: heavy per-row rule bundle at 2-split scan parallelism -> spread
     d = _spread(load_table(spark, sf_dir, "documents"))

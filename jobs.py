@@ -7,9 +7,10 @@ Usage (local sandbox stands in for a cluster — same invocation works with
   spark-submit --py-files arroyo_spark.zip jobs.py synth \
       --out /tmp/stream_src --convs 10000 --files 8
 
-  # run the flagship streaming pipeline (watermarked windowed agg +
-  # tool-call correlation) with the exactly-once sink; resumable: re-run
-  # with the same --checkpoint/--out to continue from where it stopped
+  # run the flagship streaming pipeline (filter -> per-turn text features
+  # -> watermarked tumbling-window Reduce per conversation) with the
+  # exactly-once sink; resumable: re-run with the same --checkpoint/--out
+  # to continue from where it stopped
   spark-submit --py-files arroyo_spark.zip jobs.py stream \
       --source /tmp/stream_src --out /tmp/flagship --job-id flagship
 

@@ -1,5 +1,5 @@
 """Watermarked streaming aggregation: append-mode windows through the
-exactly-once sink, late-data semantics, pipeline composition, healthcheck."""
+exactly-once sink, late-data semantics, healthcheck."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
-from arroyo_spark.plans import pipeline
 from arroyo_spark.streaming import (
     ExactlyOnceSink,
     FileStreamSource,
@@ -191,22 +190,6 @@ def test_streaming_session_window(spark, tmp_path):
     assert got[("a", m(0))] == 3  # 0,2,4 merged (gaps < 5 min)
     assert got[("a", m(20))] == 2  # 20,21 — separate session after 16-min gap
     assert ("b", m(120)) not in got  # open session not emitted
-
-
-def test_pipeline_composition(spark):
-    from arroyo_spark.operators import filter_step, run_task
-
-    df = spark.createDataFrame([(i,) for i in range(10)], "x int")
-    p = (
-        pipeline()
-        .then(filter_step, F.col("x") % 2 == 0)
-        .then(run_task, y=F.col("x") * 10)
-    )
-    rows = sorted((r.x, r.y) for r in p(df).collect())
-    assert rows == [(0, 0), (2, 20), (4, 40), (6, 60), (8, 80)]
-    # __or__ sugar
-    p2 = pipeline() | (lambda d: d.filter(F.col("x") > 7))
-    assert [r.x for r in p2(df).collect()] == [8, 9]
 
 
 def test_healthcheck_listener(spark, tmp_path):

@@ -35,8 +35,8 @@ PY_ALLOWED = {
     "multimodal_meta",
     "ann_cosine_topk",
     # r5: end-to-end PPM decode kernel (operators/multimodal.py) and the
-    # entropy Counter kernel (functions/text.py::char_ngram_entropy_arrow,
-    # 6.5x over the interpreted-HOF expression twin)
+    # entropy Counter kernel (functions/text.py::char_ngram_entropy,
+    # 6.5x over the interpreted-HOF expression form it replaced)
     "multimodal_decode",
     # r5: decode -> 2x2 floor-average pool -> PPM re-encode -> decode again
     # (two documented Arrow kernels chained)
