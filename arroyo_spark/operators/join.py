@@ -64,7 +64,6 @@ def asof_join(
     tolerance_s: float | None = None,
     right_cols: list[str] | None = None,
     tie_breakers: list[str] | None = None,
-    impl: str = "window",
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row with
     right.ts <= left.ts within the same key.
@@ -72,8 +71,8 @@ def asof_join(
     Output: every left column plus ``r_<c>`` for each right payload column
     (null when no right row qualifies).
 
-    Default plan (``impl="window"``) is pure JVM: union-tag both sides,
-    then ``last(struct(right cols), ignorenulls=True)`` over a
+    The plan is pure JVM: union-tag both sides, then
+    ``last(struct(right cols), ignorenulls=True)`` over a
     (key ORDER BY ts, side, *tie_breakers) running window — one shuffle +
     sort, whole-stage-codegen'd, no per-group size cliff (a 10^6-turn bot
     conversation is just more rows in a sorted partition, never one giant
@@ -82,31 +81,7 @@ def asof_join(
     ascending tie-breaker order wins, matching both ``pd.merge_asof``'s
     latest-row semantics and a ``last_value(... IGNORE NULLS)`` SQL oracle
     ordered by (ts, *tie_breakers).
-
-    ``impl="pandas"`` keeps the per-group ``pd.merge_asof`` cogroup as the
-    generality escape hatch (e.g. nearest-direction variants); groups are
-    whole conversations, so it carries an unbounded-group risk the window
-    plan doesn't have.
     """
-    if impl == "window":
-        return _asof_join_window(
-            left, right, key, left_ts, right_ts, tolerance_s, right_cols, tie_breakers
-        )
-    return _asof_join_pandas(
-        left, right, key, left_ts, right_ts, tolerance_s, right_cols, tie_breakers
-    )
-
-
-def _asof_join_window(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    tolerance_s: float | None,
-    right_cols: list[str] | None,
-    tie_breakers: list[str] | None,
-) -> DataFrame:
     from pyspark.sql import Window as W
 
     rcols = right_cols or [c for c in right.columns if c not in (key, right_ts)]
@@ -137,59 +112,6 @@ def _asof_join_window(
     return filled.filter(F.col("_side") == 1).select(
         *lcols, *[F.col(f"_match.{c}").alias(f"r_{c}") for c in rcols]
     )
-
-
-def _asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    tolerance_s: float | None,
-    right_cols: list[str] | None,
-    tie_breakers: list[str] | None,
-) -> DataFrame:
-    """pd.merge_asof per key group (cogroup + applyInPandas)."""
-    import pandas as pd
-
-    # Re-alias every column (fresh expression IDs): when left and right
-    # derive from the same source DataFrame, Spark's relation dedup fails to
-    # remap pass-through attributes inside FlatMapCoGroupsInPandas and the
-    # optimizer prunes the right side's ts from under the UDF.
-    left = left.select([F.col(c).alias(c) for c in left.columns])
-    right = right.select([F.col(c).alias(c) for c in right.columns])
-
-    rcols = right_cols or [c for c in right.columns if c not in (key, right_ts)]
-    lcols = list(left.columns)
-    l_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields)
-    r_fields = {f.name: f.dataType.simpleString() for f in right.schema.fields}
-    out_schema = l_schema + ", " + ", ".join(f"r_{c} {r_fields[c]}" for c in rcols)
-
-    def merge(lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
-        if lpdf.empty:
-            return pd.DataFrame(columns=[*lcols, *[f"r_{c}" for c in rcols]])
-        if rpdf.empty:
-            # key exists only on the left: emit left rows with null matches
-            out = lpdf[lcols].copy()
-            for c in rcols:
-                out[f"r_{c}"] = None
-            return out
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        # tie_breakers make the pick among equal-ts right rows deterministic
-        # (merge_asof keeps the LAST right row at each timestamp)
-        rpdf = rpdf.sort_values([right_ts, *(tie_breakers or [])], kind="mergesort").rename(
-            columns={right_ts: left_ts, **{c: f"r_{c}" for c in rcols}}
-        )
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf[[left_ts, *[f"r_{c}" for c in rcols]]],
-            on=left_ts,
-            direction="backward",
-            tolerance=pd.Timedelta(seconds=tolerance_s) if tolerance_s else None,
-        )
-        return merged[[*lcols, *[f"r_{c}" for c in rcols]]]
-
-    return left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas(merge, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -188,20 +188,24 @@ def run_task_safe(
             """(out_col -> values, reasons) for pdf, bisecting on failure."""
             try:
                 res = fn(pdf)
-                vals = {
-                    n: list(res[n].to_numpy() if hasattr(res[n], "to_numpy") else res[n])
-                    for n in names
-                }
-                return vals, [None] * len(pdf)
             except Exception as e:  # noqa: BLE001
-                if len(pdf) <= 1:
-                    return {n: [None] * len(pdf) for n in names}, [
-                        f"{type(e).__name__}: {e}"
-                    ] * len(pdf)
-                mid = len(pdf) // 2
-                lv, lr = _run(pdf.iloc[:mid].reset_index(drop=True))
-                rv, rr = _run(pdf.iloc[mid:].reset_index(drop=True))
-                return {n: lv[n] + rv[n] for n in names}, lr + rr
+                return _bisect(pdf, e)
+            vals = {
+                n: list(res[n].to_numpy() if hasattr(res[n], "to_numpy") else res[n])
+                for n in names
+            }
+            return vals, [None] * len(pdf)
+
+        def _bisect(pdf: "pd.DataFrame", e: Exception) -> tuple[dict[str, list], list]:
+            """_run over the two halves of a pdf whose fn call raised e."""
+            if len(pdf) <= 1:
+                return {n: [None] * len(pdf) for n in names}, [
+                    f"{type(e).__name__}: {e}"
+                ] * len(pdf)
+            mid = len(pdf) // 2
+            lv, lr = _run(pdf.iloc[:mid].reset_index(drop=True))
+            rv, rr = _run(pdf.iloc[mid:].reset_index(drop=True))
+            return {n: lv[n] + rv[n] for n in names}, lr + rr
 
         for pdf in batches:
             out = pdf.copy()
@@ -210,10 +214,10 @@ def run_task_safe(
                 for n in names:
                     out[n] = res[n].to_numpy() if hasattr(res[n], "to_numpy") else res[n]
                 out[INVALID_REASON_COL] = None
-            except Exception:
+            except Exception as e:  # noqa: BLE001
                 # poison batch: bisect to isolate the failing rows (reference
                 # analog: InvalidMessage identifies a single original offset)
-                vals, reasons = _run(pdf.reset_index(drop=True))
+                vals, reasons = _bisect(pdf.reset_index(drop=True), e)
                 for n in names:
                     out[n] = pd.Series(vals[n], dtype="object")
                 out[INVALID_REASON_COL] = reasons

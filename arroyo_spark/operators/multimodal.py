@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 
 from arroyo_spark.operators.map import _row_kernel, _spread
 
-MEDIA_SCHEMA = "doc_id long, media binary, media_format string, n_bytes int"
-
 
 def attach_fake_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Deterministic stand-in for a real media column: md5-derived bytes.

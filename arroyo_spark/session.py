@@ -32,9 +32,6 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (the legacy default) writes NO min/max statistics, so a
         # ts-clustered table cannot prune row groups and ts pushdown dies
@@ -42,7 +39,6 @@ def get_spark(
         # full pushdown, exact under the UTC session contract.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode = single JVM: the driver heap IS the executor heap.
         # 16g measured best on this box: the same streaming job at local[32]
         # ran 31.8s with 16g vs 206s with 64g (oversized G1 heap collapses
@@ -51,9 +47,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # streaming state store: RocksDB would be the cluster choice; the
-        # default HDFS-backed store is fine single-node and has no native dep
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
         # checkpoint renames through FileSystem.rename, not the default
         # FileContext manager: without Hadoop's native library, FileContext
         # on the local file system forks a `readlink` process per rename

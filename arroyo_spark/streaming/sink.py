@@ -17,6 +17,7 @@ arroyo.consumer.processing.time.
 
 from __future__ import annotations
 
+import copy
 import os
 import time
 from collections.abc import Callable
@@ -158,45 +159,44 @@ class ExactlyOnceSink:
             self._commit_fast(batch_df, epoch_id, t0, has_lineage)
             self._maybe_compact(batch_df.sparkSession)
             return
-        batch_df = batch_df.persist()
+        # ONE reason column routes the epoch: run_task_safe's captured
+        # reason wins, else the sink's reason wherever `valid` is not true
+        # (a NULL predicate is invalid, so no row escapes both outputs)
+        captured = INVALID_REASON_COL in batch_df.columns
+        reason = F.col(INVALID_REASON_COL) if captured else F.lit(None)
+        if self.valid is not None:
+            reason = F.coalesce(reason, F.when(self.valid, None).otherwise(F.lit(self.reason)))
+        batch_df = batch_df.withColumn(INVALID_REASON_COL, reason).persist()
+        is_valid = F.col(INVALID_REASON_COL).isNull()
         try:
             # ONE stats action on the persisted batch, before any write: the
-            # DLQ-limit check below needs n_total and must fail-stop first
+            # DLQ-limit check below needs n_total and n_invalid and must
+            # fail-stop first
             aggs, known = self._stats_aggs(batch_df, has_lineage)
-            n_total, max_ts, next_offsets = self._decode_stats(
-                batch_df, batch_df.agg(*aggs).collect()[0].asDict(), known, has_lineage
+            aggs.append(F.count(INVALID_REASON_COL).alias("n_invalid"))
+            stats = batch_df.agg(*aggs).collect()[0].asDict()
+            n_invalid = stats["n_invalid"]
+            n_total, max_ts, next_offsets = self._decode_stats(batch_df, stats, known, has_lineage)
+            # the limit is checked on a copy: the carried runs advance only
+            # with the ledger commit, so a failed epoch replays from the
+            # runs it started with
+            dlq_state = copy.deepcopy(self._dlq_state)
+            if dlq_state is not None:
+                runs = []
+                if dlq_state.limit.max_consecutive_count is not None:
+                    runs = consecutive_invalid_runs(batch_df, is_valid, dlq_state)
+                dlq_state.check_epoch(n_total, n_invalid, runs)  # raises -> epoch fails
+            data_in, dlq_df = split_dlq(
+                batch_df, is_valid, F.col(INVALID_REASON_COL), self.payload_col
             )
-
-            n_invalid = 0
-            data_in = batch_df
-            # mid-pipeline InvalidMessage capture (operators.map.run_task_safe
-            # writes _invalid_reason; originals pass through untouched)
-            captured = INVALID_REASON_COL in batch_df.columns
-            valid_cond = self.valid
-            reason: Column | str = self.reason
-            if captured:
-                is_ok = F.col(INVALID_REASON_COL).isNull()
-                valid_cond = is_ok if valid_cond is None else (valid_cond & is_ok)
-                reason = F.coalesce(F.col(INVALID_REASON_COL), F.lit(self.reason))
-            if valid_cond is not None:
-                data_in, dlq_df = split_dlq(batch_df, valid_cond, reason, self.payload_col)
-                dlq_df = dlq_df.persist()
-                n_invalid = dlq_df.count()
-                if self._dlq_state is not None:
-                    runs = consecutive_invalid_runs(batch_df, valid_cond, self._dlq_state)
-                    self._dlq_state.check_epoch(n_total, n_invalid, runs)  # raises -> epoch fails
-                if n_invalid:
-                    self._retry(
-                        lambda: dlq_df.write.mode("overwrite").parquet(self.dlq_dir(epoch_id))
-                    )
-                dlq_df.unpersist()
-            if captured:
-                data_in = data_in.drop(INVALID_REASON_COL)
-
+            if n_invalid:
+                self._retry(lambda: dlq_df.write.mode("overwrite").parquet(self.dlq_dir(epoch_id)))
+            data_in = data_in.drop(INVALID_REASON_COL)
             out = self.transform(data_in) if self.transform is not None else data_in
             self._retry(lambda: out.write.mode("overwrite").parquet(self.data_dir(epoch_id)))
             self._write_schema_once(out)
             self._finalize(epoch_id, t0, n_total, n_invalid, max_ts, next_offsets, has_lineage)
+            self._dlq_state = dlq_state
             self._maybe_compact(batch_df.sparkSession)
         finally:
             batch_df.unpersist()

@@ -37,20 +37,6 @@ BROKER_COLUMNS = T.StructType(
 
 STREAM_SCHEMA = T.StructType(list(TRANSCRIPT_SCHEMA.fields) + list(BROKER_COLUMNS.fields))
 
-# tool_calls — join-side table for turn<->tool-call correlation
-TOOL_CALL_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("call_id", T.StringType(), False),
-        T.StructField("tool", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-    ]
-)
-
-ROLES = ("user", "assistant", "system", "tool")
-
 TOOL_VOCAB = (
     "search",
     "browser",
@@ -64,17 +50,6 @@ TOOL_VOCAB = (
     "translator",
     "summarizer",
     "planner",
-)
-
-# offsets-ledger row written by the exactly-once sink
-LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("epoch_id", T.LongType(), False),
-        T.StructField("partition", T.IntegerType(), False),
-        T.StructField("next_offset", T.LongType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
 )
 
 # DLQ row (mirrors KafkaDlqProducer headers original_partition/original_offset,

@@ -9,7 +9,8 @@ Methodology matches bench.py (checksum-v1 materialize, warmup at sf0.001),
 with per-query job descriptions so the Spark UI maps time to queries.
 ``--noop`` uses the guide §1.4 noop sink instead of the checksum agg (times
 computation without the driver-side agg funnel; NOT comparable to bench.py
-numbers, use for isolation only).
+numbers, use for isolation only). The JSON line also records the host's
+1-minute load average before and after each query's runs (``load1``).
 """
 
 from __future__ import annotations
@@ -83,7 +84,11 @@ def main() -> None:
             except Exception as e:  # noqa: BLE001
                 print(f"WARN warmup {n}: {e}", file=sys.stderr)
     timings: dict[str, float] = {}
+    # host 1-minute load average before and after each query's runs: a
+    # timing taken while other work shares the cores reads slow
+    load1: dict[str, list[float]] = {}
     for n in names:
+        load_before = os.getloadavg()[0]
         best = None
         for i in range(max(args.runs, 1)):
             sc.setJobDescription(f"bench:{n}:run{i}")
@@ -92,8 +97,15 @@ def main() -> None:
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         timings[n] = round(best, 3)
-        print(f"{n}: {best:.3f}s", flush=True)
-    out = {"sf_dir": args.sf, "cpus": args.cpus, "noop": args.noop, "queries": timings}
+        load1[n] = [round(load_before, 2), round(os.getloadavg()[0], 2)]
+        print(f"{n}: {best:.3f}s (load1 {load1[n][0]} -> {load1[n][1]})", flush=True)
+    out = {
+        "sf_dir": args.sf,
+        "cpus": args.cpus,
+        "noop": args.noop,
+        "queries": timings,
+        "load1": load1,
+    }
     line = json.dumps(out)
     print(line)
     if args.json_out:

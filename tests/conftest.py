@@ -47,3 +47,19 @@ def read_profile():
             time.sleep(0.2)
 
     return read
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """How many Spark jobs ``fn()`` starts, counted through job group ``group``."""
+
+    def count(fn, group: str) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

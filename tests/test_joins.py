@@ -68,9 +68,45 @@ def test_asof_join_tolerance(spark):
     assert asof_join(left, right, tolerance_s=50).collect()[0].r_event is None
 
 
+def _merge_asof_per_key(left, right, key, right_cols, tie_breakers, tolerance_s=None):
+    """Reference as-of join on ``ts``: ``pd.merge_asof`` per key group
+    (cogroup + applyInPandas), which keeps the LAST right row at a
+    timestamp once the right side is sorted by (ts, *tie_breakers)."""
+    import pandas as pd
+
+    # Re-alias every column (fresh expression IDs): when left and right
+    # derive from the same source DataFrame, Spark's relation dedup fails to
+    # remap pass-through attributes inside FlatMapCoGroupsInPandas and the
+    # optimizer prunes the right side's ts from under the UDF.
+    left = left.select([F.col(c).alias(c) for c in left.columns])
+    right = right.select([F.col(c).alias(c) for c in right.columns])
+    lcols, rnames = list(left.columns), [f"r_{c}" for c in right_cols]
+    r_types = {f.name: f.dataType.simpleString() for f in right.schema.fields}
+    schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields]
+        + [f"r_{c} {r_types[c]}" for c in right_cols]
+    )
+
+    def merge(lpdf, rpdf):
+        if lpdf.empty or rpdf.empty:
+            # no left rows, or a key only on the left: null matches
+            return lpdf[lcols].assign(**{n: None for n in rnames})
+        rpdf = rpdf.sort_values(["ts", *tie_breakers], kind="mergesort")
+        merged = pd.merge_asof(
+            lpdf.sort_values("ts", kind="mergesort"),
+            rpdf.rename(columns=dict(zip(right_cols, rnames)))[["ts", *rnames]],
+            on="ts",
+            direction="backward",
+            tolerance=pd.Timedelta(seconds=tolerance_s) if tolerance_s else None,
+        )
+        return merged[[*lcols, *rnames]]
+
+    return left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas(merge, schema=schema)
+
+
 def test_asof_window_plan_equals_pandas_plan(spark):
-    """The default JVM window plan and the pd.merge_asof cogroup must agree
-    row-for-row (including keys with no right rows and tolerance)."""
+    """The JVM window plan and the per-key pd.merge_asof reference must
+    agree row-for-row (including keys with no right rows and tolerance)."""
     from arroyo_spark.synth import transcripts
 
     t = transcripts(spark, 30, partitions=4, with_lineage=False).cache()
@@ -81,12 +117,9 @@ def test_asof_window_plan_equals_pandas_plan(spark):
     for tol in (None, 20):
         a = asof_join(
             left, right, key="conv_id", right_cols=["u_turn"],
-            tie_breakers=["u_turn"], tolerance_s=tol, impl="window",
+            tie_breakers=["u_turn"], tolerance_s=tol,
         )
-        b = asof_join(
-            left, right, key="conv_id", right_cols=["u_turn"],
-            tie_breakers=["u_turn"], tolerance_s=tol, impl="pandas",
-        )
+        b = _merge_asof_per_key(left, right, "conv_id", ["u_turn"], ["u_turn"], tol)
         ka = sorted(map(tuple, a.collect()))
         kb = sorted(map(tuple, b.collect()))
         assert ka == kb, f"tolerance={tol}"
@@ -96,7 +129,7 @@ def test_asof_window_plan_equals_pandas_plan(spark):
 def test_asof_join_tie_breaker_deterministic(spark):
     """Among right rows sharing a timestamp, the LAST in ascending
     tie-breaker order wins (matches an IGNORE-NULLS window oracle ordered
-    by (ts, tie_breaker))."""
+    by (ts, tie_breaker), and the pd.merge_asof reference)."""
     left = spark.createDataFrame(
         [("k", 0, T0 + timedelta(seconds=10))], "conv_id string, turn_idx int, ts timestamp"
     )
@@ -104,11 +137,10 @@ def test_asof_join_tie_breaker_deterministic(spark):
         [("k", T0, 7), ("k", T0, 3), ("k", T0, 9)],
         "conv_id string, ts timestamp, event_id int",
     )
-    for impl in ("window", "pandas"):
-        got = asof_join(
-            left, right, key="conv_id", tie_breakers=["event_id"], impl=impl
-        ).collect()[0]
-        assert got.r_event_id == 9, impl
+    got = asof_join(left, right, key="conv_id", tie_breakers=["event_id"]).collect()[0]
+    assert got.r_event_id == 9
+    ref = _merge_asof_per_key(left, right, "conv_id", ["event_id"], ["event_id"]).collect()[0]
+    assert ref.r_event_id == 9
 
 
 def test_salted_agg_equals_plain_agg(spark):

@@ -151,6 +151,25 @@ def test_run_task_safe_bisects_multi_poison_batch(spark):
             assert n == i + 1 and reason is None
 
 
+def test_run_task_safe_bisects_from_the_halves(spark):
+    """A batch whose fn call raised is not fed to fn whole a second time:
+    bisection starts from its two halves. One poison row at position 5 of
+    a 10-row batch costs fn 10 + 5 + 5 + 2 + 1 + 1 + 3 = 27 rows."""
+    fed = spark.sparkContext.accumulator(0)
+    df = spark.createDataFrame(
+        [(i, None if i == 5 else "x") for i in range(10)], "id long, text string"
+    ).coalesce(1)
+
+    def length_fn(pdf):
+        fed.add(len(pdf))
+        return pdf.assign(n_chars=[len(t) for t in pdf["text"]])
+
+    got = sorted(run_task_safe(df, length_fn, {"n_chars": "long"}).collect())
+    assert [r.n_chars for r in got] == [1] * 5 + [None] + [1] * 4
+    assert [r._invalid_reason is not None for r in got] == [i == 5 for i in range(10)]
+    assert fed.value == 27
+
+
 class _Ev:
     def __init__(self, qid):
         self.id = qid

@@ -104,18 +104,7 @@ def test_sink_fast_path_metrics_and_output(spark, tmp_path):
     assert len(ledger.epochs()) == 2
 
 
-def _jobs_run_by(spark, fn, group: str) -> int:
-    """How many Spark jobs ``fn()`` starts, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_sink_empty_fast_path_epoch_is_one_job(spark, tmp_path):
+def test_sink_empty_fast_path_epoch_is_one_job(spark, tmp_path, jobs_run_by):
     """A no-transform epoch that emits no rows trusts its zero observation:
     the data write is the epoch's only Spark job (a re-measure would run the
     whole micro-batch again), and the ledger still records run.count 0.
@@ -124,7 +113,7 @@ def test_sink_empty_fast_path_epoch_is_one_job(spark, tmp_path):
     ledger = OffsetsLedger(str(tmp_path), "empty")
     sink = ExactlyOnceSink(output_dir=str(tmp_path / "empty"), ledger=ledger)
     df = spark.range(100).filter(F.col("id") < 0)
-    assert _jobs_run_by(spark, lambda: sink(df, 0), "empty_fast_path_epoch") == 1
+    assert jobs_run_by(lambda: sink(df, 0), "empty_fast_path_epoch") == 1
     assert ledger.entries()[0]["metrics"]["arroyo.consumer.run.count"] == 0.0
     assert ledger.epochs() == [0]
 

@@ -401,3 +401,91 @@ def test_dlq_consecutive_run_carries_across_epochs(spark):
     runs2 = consecutive_invalid_runs(df2, F.col("payload") >= 7, state)
     with pytest.raises(DlqLimitExceeded):
         state.check_epoch(4, 3, runs2)
+
+
+def _lineage_batch(spark, roles, lo=0):
+    """One partition-0 batch: row i has offset lo + i and role roles[i]."""
+    import datetime
+
+    rows = [
+        (0, lo + i, role, f"t{lo + i}", datetime.datetime(2026, 1, 1, 0, 0, i % 60))
+        for i, role in enumerate(roles)
+    ]
+    return spark.createDataFrame(
+        rows, "partition int, offset long, role string, text string, ts timestamp"
+    )
+
+
+def test_dlq_null_validity_is_invalid(spark, tmp_path):
+    """A row whose ``valid`` predicate is NULL (here: a NULL role) is
+    invalid: it reaches the DLQ with the sink's reason, so every input row
+    lands in the data or the DLQ and the counts match."""
+    ledger = OffsetsLedger(str(tmp_path), "nullvalid")
+    sink = ExactlyOnceSink(
+        output_dir=str(tmp_path / "nullvalid"),
+        ledger=ledger,
+        valid=F.col("role") != "tool",
+        reason="not a tool-free turn",
+    )
+    sink(_lineage_batch(spark, ["user", "tool", None, "assistant", "user"]), 0)
+    assert sorted(r.offset for r in sink.read_output(spark).collect()) == [0, 3, 4]
+    dlq = {r.original_offset: r.reason for r in sink.read_dlq(spark).collect()}
+    assert dlq == {1: "not a tool-free turn", 2: "not a tool-free turn"}
+    metrics = ledger.entries()[0]["metrics"]
+    assert metrics["arroyo.consumer.run.count"] == 5.0
+    assert metrics["arroyo.consumer.invalid_message.count"] == 2.0
+
+
+def test_dlq_ratio_limit_costs_no_extra_jobs(spark, tmp_path, jobs_run_by):
+    """A ratio-only DlqLimit needs nothing beyond the invalid count the
+    stats pass already takes: a steady-state epoch (second epoch, known
+    partition) runs as many Spark jobs as one with no limit."""
+    roles = ["tool" if i % 5 == 0 else "user" for i in range(20)]
+    jobs = {}
+    for name, limit in [("none", None), ("ratio", DlqLimit(max_invalid_ratio=0.9))]:
+        ledger = OffsetsLedger(str(tmp_path), name)
+        sink = ExactlyOnceSink(
+            output_dir=str(tmp_path / name),
+            ledger=ledger,
+            valid=F.col("role") != "tool",
+            dlq_limit=limit,
+        )
+        sink(_lineage_batch(spark, roles), 0)
+        second = _lineage_batch(spark, roles, lo=20)
+        jobs[name] = jobs_run_by(lambda: sink(second, 1), f"dlq_{name}_epoch")
+        assert ledger.epochs() == [0, 1]
+    assert jobs["ratio"] == jobs["none"]
+
+
+def test_dlq_consecutive_state_advances_with_the_commit(spark, tmp_path):
+    """Invalid runs at both ends of an epoch whose transform fails once:
+    the replay by the same sink must not count the epoch's own trailing run
+    as carried into its leading run (3 + 3 = 6 > 4). The carried runs
+    advance only when the epoch commits."""
+    from arroyo_spark.streaming.retries import NO_RETRY
+
+    calls = []
+
+    def fails_once(df):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("transient transform failure")
+        return df
+
+    ledger = OffsetsLedger(str(tmp_path), "replay")
+    sink = ExactlyOnceSink(
+        output_dir=str(tmp_path / "replay"),
+        ledger=ledger,
+        transform=fails_once,
+        valid=F.col("role") != "tool",
+        dlq_limit=DlqLimit(max_consecutive_count=4),
+        write_retry=NO_RETRY,
+    )
+    batch = _lineage_batch(spark, ["tool"] * 3 + ["user"] * 4 + ["tool"] * 3)
+    with pytest.raises(RuntimeError, match="transient"):
+        sink(batch, 0)
+    assert ledger.epochs() == []
+    sink(batch, 0)  # the replay
+    assert ledger.epochs() == [0]
+    assert sink.read_dlq(spark).count() == 6
+    assert sink.read_output(spark).count() == 4
